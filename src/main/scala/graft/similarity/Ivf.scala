@@ -152,11 +152,21 @@ object Ivf {
     * pre-count never materializes query vectors on the driver. Callers
     * wrap their FINAL probe-side frame in `broadcast()` when this holds,
     * so the corpus never shuffles.
+    *
+    * Each partition counts at most `MaxBroadcastProbes + 1` rows: once
+    * one partition reaches that cap the sum decides "large" exactly as
+    * the full count would. Not `limit(n).count()`: Spark names the
+    * counter of every codegen'd limit with a JVM-wide sequence number,
+    * so that plan's classes never hit the codegen cache and every call
+    * recompiled them; it also shuffled to one partition.
     */
   private[similarity] def probeSideSmall(queries: DataFrame, idCol: String,
-      nprobe: Int): Boolean =
-    queries.select(col(idCol)).limit((MaxBroadcastProbes + 1).toInt)
-      .count() * nprobe <= MaxBroadcastProbes
+      nprobe: Int): Boolean = {
+    val cap = (MaxBroadcastProbes + 1).toInt
+    queries.select(col(idCol)).rdd
+      .mapPartitions(rows => Iterator(rows.take(cap).size.toLong))
+      .fold(0L)(_ + _) * nprobe <= MaxBroadcastProbes
+  }
 
   /** Shared scoring stage: probe-side join on cid, exact cosine, top-k.
     * Expects corpus (id, cid, vec) and probe side (qid, cid, qvec) — the
