@@ -81,22 +81,17 @@ object UnigramTok {
   /** Micro-nat costs from a (piece, cnt) frame — cost over the frame's
     * OWN total, the normalization both gates' oracles recompute.
     *
-    * The total rides as a 1-row broadcast INSIDE the plan (r19): the
-    * previous `.first()` action paid one extra JOB per call and
-    * re-executed the whole pieceCnt subtree (for the EM loop, the
-    * Viterbi E-step) once for the total and again for the costed frame
-    * — four extra jobs per t59/t60 gate. In one plan the two branches
-    * share the aggregation exchange (ReusedExchange), so the subtree
-    * runs once. cnt/total arithmetic is bit-identical: both operands
-    * long→double cast, same IEEE division.
+    * The total is one `.first()` job folded in as a literal. Carrying it
+    * instead as a broadcast 1-row cross join inside the plan ran MORE
+    * jobs, not fewer: 20 vs 15 Spark jobs per t59 call and 22 vs 17 per
+    * t60 call at sf0.1 (local[4]), with 510 vs 373 ms of task time on
+    * t59, and was slower on both gates in every A/B pair.
     */
   private def withCosts(pieceCnt: DataFrame): DataFrame = {
-    val tot = pieceCnt.agg(sum(col("cnt")).as("__total"))
-    pieceCnt.crossJoin(broadcast(tot))
-      .withColumn("cost",
-        (-floor(log(col("cnt").cast("double") / col("__total").cast("double"))
-          * lit(1000000.0) + lit(0.5))).cast("long"))
-      .drop("__total")
+    val total = pieceCnt.agg(sum(col("cnt"))).first().getLong(0)
+    pieceCnt.withColumn("cost",
+      (-floor(log(col("cnt").cast("double") / lit(total.toDouble))
+        * lit(1000000.0) + lit(0.5))).cast("long"))
   }
 
   /** Collect a (piece, cost) vocabulary frame into the compiled
