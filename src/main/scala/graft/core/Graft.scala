@@ -18,6 +18,28 @@ object Graft {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Static conf sizing Spark's JVM-wide LRU of compiled classes
+    * (whole-stage, projection, predicate). It is read once, when the
+    * first class is generated, so the first session of a JVM fixes it.
+    */
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** Sized to hold the classes of one pass over every gate. Spark's
+    * default of 100 is smaller than one round of a long-lived graft
+    * session (Bench, Verify, the test suite, a driver dispatching several
+    * jobs), and an LRU smaller than a cyclic working set hits nothing: at
+    * 100, each warm round recompiled every class.
+    *
+    * Distinct classes per pass, counted with an unbounded cache (local[4],
+    * driver and executor copies each count): 180 for the benchmark's 7
+    * gate operations, 123 for its 6 mozetl commands, 3,024 for a Verify
+    * pass over all 236 gates at sf0.01. That Verify pass ends at 225 MB of
+    * metaspace holding all of them, against 202 MB at a cache of 100
+    * (~8 KB per class). A one-shot `cli.Main` run compiles one command's
+    * classes once and gains nothing from the size.
+    */
+  val CodegenCacheEntries = 4096
+
   /** Configure a builder with the engine's standard settings. Safe for both
     * local[*] testing and cluster deployment (nothing here is local-only).
     *
@@ -25,7 +47,9 @@ object Graft {
     * via `--conf` / spark-defaults (visible as a system property) is
     * PRESERVED with GraftExtensions appended. A value set on the builder
     * itself before calling configure() cannot be read back (Builder has no
-    * getter) — pass it via `extraExtensions` instead.
+    * getter) — pass it via `extraExtensions` instead. The same rule keeps
+    * a user's `spark.sql.codegen.cache.maxEntries` over
+    * [[CodegenCacheEntries]].
     */
   def configure(b: SparkSession.Builder, shufflePartitions: Int,
       extraExtensions: Seq[String] = Nil): SparkSession.Builder = {
@@ -33,7 +57,9 @@ object Graft {
       (sys.props.get("spark.sql.extensions").toSeq.flatMap(_.split(','))
         .map(_.trim).filter(_.nonEmpty) ++
         extraExtensions :+ "graft.core.GraftExtensions").distinct.mkString(",")
-    b.config("spark.sql.session.timeZone", "UTC")
+    b.config(CodegenCacheKey,
+        sys.props.getOrElse(CodegenCacheKey, CodegenCacheEntries.toString))
+      .config("spark.sql.session.timeZone", "UTC")
       // engine extensions: native SQL functions + optimizer rules (the
       // RangeJoinRewrite rule is inert until its width conf is set) —
       // loading them here means every session, test or cluster, runs the
