@@ -41,6 +41,15 @@ private class ShuffleMetricsListener extends SparkListener {
   * `stream_trigger` sentinel pair quantifies session-aging overhead
   * directly, so a future reader can adjudicate this class of drift from
   * the artifact alone.
+  *
+  * `codegen` records the classes Spark compiled during the timed runs
+  * (count from `CodegenMetrics`, ms from `CodeGenerator.compileTime`), in
+  * total and per gate under `codegen_by_query` in the file artifact. A
+  * gate's warm-up run directly before its min-of-N refills the codegen
+  * cache with that gate's classes, so thrash ACROSS gates (a cache
+  * smaller than the suite's working set but larger than one gate's) does
+  * not show in these times; a non-zero count here means a gate compiles
+  * on every run (generated source that differs between runs).
   */
 object Bench {
 
@@ -99,6 +108,11 @@ object Bench {
     once("bench_trigger_probe")
   }
 
+  /** (classes compiled, compile nanos) since JVM start. */
+  private def codegenSnapshot(): (Long, Long) =
+    (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
@@ -142,7 +156,7 @@ object Bench {
       */
     def runSection(spark: SparkSession,
         queries: Seq[graft.queries.GateQuery])
-        : Seq[(String, Either[String, Double], Long)] = {
+        : Seq[(String, Either[String, Double], Long, (Long, Long))] = {
       val metrics = new ShuffleMetricsListener
       spark.sparkContext.addSparkListener(metrics)
       // Listener events arrive asynchronously on the bus; drain it before
@@ -177,6 +191,7 @@ object Bench {
         }
       queries.map { q =>
         timedRun(q) // warmup, untimed for reporting
+        val (c0, n0) = codegenSnapshot()
         // shuffle bytes are a plan property — capture them on the first
         // timed run only (identical across runs)
         val (r0, w0) = drainedSnapshot()
@@ -189,7 +204,8 @@ object Bench {
             (baseRuns until 3).foldLeft(base)((b, _) => minRun(q, b))
           case other => other
         }
-        (q.name, best, (r1 - r0) + (w1 - w0))
+        val (c1, n1) = codegenSnapshot()
+        (q.name, best, (r1 - r0) + (w1 - w0), (c1 - c0, n1 - n0))
       }
     }
 
@@ -283,15 +299,20 @@ object Bench {
       case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
     } + "\""
     val qs = results.map {
-      case (k, Right(v), _) => "\"" + k + "\":" + f3(v)
-      case (k, Left(e), _)  => "\"" + k + "\":{\"err\":" + jstr(e) + "}"
+      case (k, Right(v), _, _) => "\"" + k + "\":" + f3(v)
+      case (k, Left(e), _, _)  => "\"" + k + "\":{\"err\":" + jstr(e) + "}"
     }.mkString("{", ",", "}")
-    val sh = results.map { case (k, _, b) =>
+    val sh = results.map { case (k, _, b, _) =>
       "\"" + k + "\":" + f3(b / 1024 / 1024.0) }.mkString("{", ",", "}")
+    // per gate: [classes compiled, compile ms] over its timed runs
+    val cgq = results.map { case (k, _, _, (c, ns)) =>
+      "\"" + k + "\":[" + c + "," + f3(ns / 1e6) + "]" }.mkString("{", ",", "}")
+    val codegen = s""""codegen":{"compiles":${results.map(_._4._1).sum},""" +
+      s""""ms":${f3(results.map(_._4._2).sum / 1e6)}}"""
     val errCount = results.count(_._2.isLeft)
     // total covers succeeding queries only; n_err flags the exclusions so
     // a partially-broken suite can't masquerade as a fast one
-    val total = results.collect { case (_, Right(v), _) => v }.sum
+    val total = results.collect { case (_, Right(v), _, _) => v }.sum
     // Sentinel block: loadavg (1-min) and the fixed calibration query's
     // seconds at start/end (idle 32-core reference ~0.1 s — a reader
     // seeing 2-3x that should treat per-query times as load-inflated
@@ -314,9 +335,9 @@ object Bench {
         s""""calibration_mid_cols":["gate","transient","settled"],""" +
         s""""stream_trigger":{"aged":${f3(trigAged)},"fresh":${f3(trigFresh)}}"""
     val compact =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_err":$errCount,$sentinel,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_err":$errCount,$sentinel,$codegen,"queries":$qs,"sf":"$sfDir"}"""
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_err":$errCount,$sentinel,"queries":$qs,"shuffle_mb":$sh,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_err":$errCount,$sentinel,$codegen,"queries":$qs,"shuffle_mb":$sh,"codegen_by_query":$cgq,"sf":"$sfDir"}"""
     // Persist the full JSON (incl. shuffle_mb + sentinels) to files FIRST,
     // then print the compact line LAST so it sits at the very end of the
     // tail window. Two copies: the env-selected path AND a fixed repo-local
