@@ -9,9 +9,19 @@ import org.apache.spark.sql.functions._
   * Spark-first: every Python UDF in the reference is replaced by a native
   * expression (no Python workers / no UDF at all):
   *  - get_ad_click_count / get_search_with_ads_count (aggregates.py:190-205)
-  *    → explode(transform(map_entries(m), …)) — SURVEY §2.9 E3.
+  *    → transform(map_entries(m), …) — SURVEY §2.9 E3.
   *  - get_search_addon_version (aggregates.py:182-187, positional a[5]/a[0])
   *    → filter(active_addons, …)[0].version with named fields.
+  *
+  * Each job reads its input once and aggregates once, where the reference
+  * scans four times and aggregates twice. Both rewrites give the
+  * reference's rows and columns:
+  *  - the four-branch union of search rows (aggregates.py:208-284) is one
+  *    `explode` over a `concat` of four arrays ([[explodeSearchCounts]]);
+  *  - the aggregate-then-pivot (aggregates.py:129-179) is one aggregation
+  *    with a `sum(when(type = t, count))` per type ([[aggSearchData]]).
+  *    This needs `type` to be a function of `source` and `source` to be a
+  *    grouping column; `aggSearchData` requires the latter.
   */
 object SearchAggregates {
 
@@ -28,65 +38,56 @@ object SearchAggregates {
     "scalar_parent_browser_search_ad_clicks",
     "scalar_parent_browser_search_with_ads")
 
-  /** Base column list of the exploded frame: every main_summary column
-    * except the three search sources, then engine/source/count — union
-    * branches are positional (aggregates.py:253-284), so the order is
-    * pinned here once.
-    */
-  private def baseColumns(ms: DataFrame): Seq[String] =
-    ms.columns.toSeq.filterNot(sourceColumns.contains)
+  private val searchCountType =
+    "array<struct<engine:string,source:string,count:bigint>>"
 
   /** aggregates.py:208-284: one row per (ping, search-count entry), plus
     * ad-click and search-with-ads map entries shaped like search counts,
     * plus a zero row per ping with NULL search_counts.
+    *
+    * The reference unions four branches, each a scan of `ms`; here one
+    * `explode` over the `concat` of four search-count-shaped arrays yields
+    * the same row multiset from one scan. Each piece is coalesced to an
+    * empty array so a NULL input adds no rows, as `explode` of NULL did:
+    *  - `search_counts` with the outlier cap (aggregates.py:226-228); NULL
+    *    elements and NULL counts fail the cap, as they failed the filter;
+    *  - ad-click / search-with-ads map entries (native E3 rewrite of the
+    *    reference UDFs); an absent map column adds nothing, like the
+    *    reference's AnalysisException fallback (aggregates.py:270-273);
+    *  - a zero row when `search_counts` is NULL (aggregates.py:275-284):
+    *    count 0, not NULL, to keep per-user averages easy downstream.
+    *
+    * Output columns: every `ms` column except the three search sources,
+    * then engine/source/count.
     */
   def explodeSearchCounts(ms: DataFrame): DataFrame = {
-    val base = baseColumns(ms)
-
-    def shaped(df: DataFrame, engine: Column, source: Column,
-        count: Column): DataFrame =
-      df.select(base.map(col) ++ Seq(engine.as("engine"),
-        source.as("source"), count.as("count")): _*)
-
-    // main branch: explode search_counts, outlier cap (aggregates.py:226-228)
-    val exploded = ms
-      .withColumn("single_search_count", explode(col("search_counts")))
-      .filter(col("single_search_count.count") < MaxClientSearchCount)
-    val searches = shaped(exploded,
-      col("single_search_count.engine"),
-      col("single_search_count.source"),
-      col("single_search_count.count"))
-
-    // ad-click / search-with-ads: map<engine,count> → search-count-shaped
-    // rows (native E3 rewrite of the reference UDFs). Tolerate absent
-    // columns like the reference's AnalysisException fallback
-    // (aggregates.py:270-273).
-    def mapBranch(column: String, sourceTag: String): Option[DataFrame] =
+    def mapEntries(column: String, sourceTag: String): Option[Column] =
       if (!ms.columns.contains(column)) None
-      else Some {
-        val entries = ms.withColumn("__e",
-          explode(transform(map_entries(col(column)),
-            e => struct(e.getField("key").as("engine"),
-              lit(sourceTag).as("source"),
-              e.getField("value").as("count")))))
-        shaped(entries, col("__e.engine"), col("__e.source"),
-          col("__e.count").cast("long"))
-      }
+      else Some(transform(map_entries(col(column)),
+        e => struct(e.getField("key").as("engine"),
+          lit(sourceTag).as("source"),
+          e.getField("value").cast("long").as("count"))))
 
-    val withAds = Seq(
-      mapBranch("scalar_parent_browser_search_ad_clicks", "ad-click:"),
-      mapBranch("scalar_parent_browser_search_with_ads", "search-with-ads:"))
-      .flatten.foldLeft(searches)(_ union _)
+    val pieces = Seq(
+      Some(filter(col("search_counts"),
+        s => s.getField("count") < MaxClientSearchCount)),
+      mapEntries("scalar_parent_browser_search_ad_clicks", "ad-click:"),
+      mapEntries("scalar_parent_browser_search_with_ads", "search-with-ads:"),
+      Some(when(col("search_counts").isNull, array(struct(
+        lit(null).cast("string").as("engine"),
+        lit(null).cast("string").as("source"), lit(0L).as("count"))))))
+      .flatten.map(p => coalesce(p.cast(searchCountType),
+        array().cast(searchCountType)))
 
-    // zero-search branch (aggregates.py:275-284): count 0, not NULL, to
-    // keep per-user averages easy downstream.
-    val zeros = shaped(ms.where(col("search_counts").isNull),
-      lit(null).cast("string"), lit(null).cast("string"), lit(0L))
-
-    withAds.union(zeros)
+    val base = ms.columns.toSeq.filterNot(sourceColumns.contains)
+    ms.select(base.map(col) :+ explode(concat(pieces: _*)).as("__s"): _*)
+      .select(base.map(col) ++ Seq("engine", "source", "count")
+        .map(f => col(s"__s.$f").as(f)): _*)
   }
 
-  /** aggregates.py:287-322: search type classification + addon version. */
+  /** aggregates.py:287-322: search type classification + addon version.
+    * `type` reads `source` and nothing else; [[aggSearchData]] relies on it.
+    */
   def addDerivedColumns(exploded: DataFrame): DataFrame = {
     val sourceMappings = Seq(
       "in-content:sap:" -> "tagged-sap",
@@ -114,18 +115,31 @@ object SearchAggregates {
       .withColumn("addon_version", addonVersion)
   }
 
-  /** aggregates.py:129-179: aggregate + pivot on search type. */
+  /** The seven search types, in the reference's pivot order. */
+  val SearchTypes: Seq[String] = Seq("organic", "tagged-sap",
+    "tagged-follow-on", "sap", "unknown", "ad-click", "search-with-ads")
+
+  /** aggregates.py:129-179: aggregate, one column per search type.
+    *
+    * The reference aggregates by (groupingCols, type) and then pivots
+    * `type` with a second `groupBy(...).pivot("type").sum("count")`. `type`
+    * is a function of `source` alone (see [[addDerivedColumns]]), so when
+    * `source` is a grouping column every group holds exactly one type, the
+    * first aggregation's groups are the pivot's groups, and one aggregation
+    * computing `sum(when(type = t, count)) AS t` per type gives the same
+    * rows and columns with one shuffle instead of two.
+    */
   def aggSearchData(ms: DataFrame, groupingCols: Seq[String],
       aggFunctions: Seq[Column]): DataFrame = {
-    val augmented = addDerivedColumns(explodeSearchCounts(ms))
-    val aggregated = augmented.groupBy((groupingCols :+ "type").map(col): _*)
-      .agg((aggFunctions :+ sum("count").as("count")).head,
-        (aggFunctions :+ sum("count").as("count")).tail: _*)
-    val pivotGroup = aggregated.columns.filterNot(Seq("type", "count").contains)
-    aggregated.groupBy(pivotGroup.map(col): _*)
-      .pivot("type", Seq("organic", "tagged-sap", "tagged-follow-on", "sap",
-        "unknown", "ad-click", "search-with-ads"))
-      .sum("count")
+    require(groupingCols.contains("source"),
+      "aggSearchData must group by source: it folds the type pivot into " +
+        "the aggregation, which is exact only when each group has one type")
+    val byType = SearchTypes.map(t =>
+      sum(when(col("type") === t, col("count"))).as(t))
+    val aggs = aggFunctions ++ byType
+    addDerivedColumns(explodeSearchCounts(ms))
+      .groupBy(groupingCols.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
       .withColumn("tagged_sap", col("tagged-sap"))
       .withColumn("tagged_follow_on", col("tagged-follow-on"))
       .withColumn("ad_click", col("ad-click"))
@@ -134,36 +148,44 @@ object SearchAggregates {
 
   private def aggFirstNamed(c: String): Column = first(col(c)).as(c)
 
+  /** aggregates.py:55-105: the search_clients_daily grouping. */
+  val ClientsDailyGrouping: Seq[String] =
+    Seq("client_id", "submission_date", "engine", "source")
+
+  /** aggregates.py:55-105: the search_clients_daily aggregates. */
+  def clientsDailyAggregates: Seq[Column] =
+    Seq("country", "app_version", "distribution_id", "locale",
+      "user_pref_browser_search_region", "search_cohort", "addon_version",
+      "os", "os_version", "channel", "profile_creation_date",
+      "default_search_engine", "default_search_engine_data_load_path",
+      "default_search_engine_data_submission_url", "sample_id")
+      .map(aggFirstNamed) ++
+      Seq(
+        count(when(col("subsession_counter") === 1, 1))
+          .as("sessions_started_on_this_day"),
+        first(datediff(col("subsession_start_date"),
+          from_unixtime(col("profile_creation_date") * 24 * 60 * 60)))
+          .as("profile_age_in_days"),
+        sum(col("subsession_length") / 3600.0).as("subsession_hours_sum"),
+        avg(size(col("active_addons"))).as("active_addons_count_mean"),
+        max(col("scalar_parent_browser_engagement_max_concurrent_tab_count"))
+          .as("max_concurrent_tab_count_max"),
+        sum(col("scalar_parent_browser_engagement_tab_open_event_count"))
+          .as("tab_open_event_count_sum"),
+        sum(col("active_ticks") * 5 / 3600.0).as("active_hours_sum"))
+
+  /** aggregates.py:108-126: the search_aggregates grouping. */
+  val AggregatesGrouping: Seq[String] =
+    Seq("addon_version", "app_version", "country", "distribution_id",
+      "engine", "locale", "os", "os_version", "search_cohort", "source",
+      "submission_date", "default_search_engine")
+
   /** aggregates.py:55-105: per-(client, day, engine, source) rollup. */
   def searchClientsDaily(ms: DataFrame): DataFrame =
-    aggSearchData(ms,
-      Seq("client_id", "submission_date", "engine", "source"),
-      Seq("country", "app_version", "distribution_id", "locale",
-        "user_pref_browser_search_region", "search_cohort", "addon_version",
-        "os", "os_version", "channel", "profile_creation_date",
-        "default_search_engine", "default_search_engine_data_load_path",
-        "default_search_engine_data_submission_url", "sample_id")
-        .map(aggFirstNamed) ++
-        Seq(
-          count(when(col("subsession_counter") === 1, 1))
-            .as("sessions_started_on_this_day"),
-          first(datediff(col("subsession_start_date"),
-            from_unixtime(col("profile_creation_date") * 24 * 60 * 60)))
-            .as("profile_age_in_days"),
-          sum(col("subsession_length") / 3600.0).as("subsession_hours_sum"),
-          avg(size(col("active_addons"))).as("active_addons_count_mean"),
-          max(col("scalar_parent_browser_engagement_max_concurrent_tab_count"))
-            .as("max_concurrent_tab_count_max"),
-          sum(col("scalar_parent_browser_engagement_tab_open_event_count"))
-            .as("tab_open_event_count_sum"),
-          sum(col("active_ticks") * 5 / 3600.0).as("active_hours_sum")))
+    aggSearchData(ms, ClientsDailyGrouping, clientsDailyAggregates)
 
   /** aggregates.py:108-126: executive dashboard rollup. */
   def searchAggregates(ms: DataFrame): DataFrame =
-    aggSearchData(ms,
-      Seq("addon_version", "app_version", "country", "distribution_id",
-        "engine", "locale", "os", "os_version", "search_cohort", "source",
-        "submission_date", "default_search_engine"),
-      Seq.empty)
+    aggSearchData(ms, AggregatesGrouping, Seq.empty)
       .where(col("engine").isNotNull)
 }
