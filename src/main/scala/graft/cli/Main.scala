@@ -91,6 +91,19 @@ object Main {
       println(s"[graft] $command wrote $path")
     }
 
+    // Registers the clients_daily view a TAAR command queries, once the
+    // input has every column that command reads: graft's own clients_daily
+    // writes neither active_addons nor submission_date_s3, and a missing
+    // column should fail here by name, not as a Spark resolution error.
+    def clientsDailyView(columns: String*): Unit = {
+      val in = input
+      val have = in.columns.map(_.toLowerCase).toSet
+      val missing = columns.filterNot(c => have(c.toLowerCase))
+      require(missing.isEmpty, s"$command needs clients_daily columns " +
+        s"${missing.mkString(", ")}, absent from ${required("input")}")
+      in.createOrReplaceTempView("clients_daily")
+    }
+
     command match {
       case "clients_daily" =>
         val (windowed, startDate) =
@@ -147,18 +160,20 @@ object Main {
         println(s"[graft] landfill_sampler wrote ${required("output")}")
 
       case "taar_lite" =>
-        input.createOrReplaceTempView("clients_daily")
+        clientsDailyView("client_id", "active_addons", "channel",
+          "normalized_channel", "app_name")
         val wl = required("whitelist").split(",").toSeq
         write(taar.LiteGuidGuid.transform(
           taar.LiteGuidGuid.extractTelemetry(spark, wl)),
           required("output"))
 
       case "taar_lite_guidranking" =>
-        input.createOrReplaceTempView("clients_daily")
+        clientsDailyView("active_addons", "channel", "app_name")
         write(taar.LiteGuidRanking.extractTelemetry(spark), required("output"))
 
       case "taar_locale" =>
-        input.createOrReplaceTempView("clients_daily")
+        clientsDailyView("client_id", "submission_date_s3", "locale",
+          "active_addons", "app_name", "channel")
         val wl = required("whitelist").split(",").toSeq
         val dict = taar.Locale.generateDictionary(spark, wl,
           required("start-date"), o.getOrElse("num-addons", "10").toInt,

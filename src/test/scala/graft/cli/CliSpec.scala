@@ -164,6 +164,23 @@ class CliSpec extends SparkSpec {
       include("g100@x")
   }
 
+  it should "name the clients_daily columns taar_lite needs and lacks" in {
+    import graft.jobs.MainSummaryFixture
+    val ms = tmp("chain-ms"); val cd = tmp("chain-cd")
+    makeDF(MainSummaryFixture.schema, MainSummaryFixture.base,
+      Seq(Map("document_id" -> "d1")))
+      .write.partitionBy("submission_date_s3").mode("overwrite").parquet(ms)
+    dispatch("clients_daily", "input" -> ms, "output" -> cd,
+      "date" -> "2017-01-11")
+    spark.read.parquet(cd).count() shouldBe 1
+    val e = intercept[IllegalArgumentException] {
+      dispatch("taar_lite", "input" -> cd, "output" -> tmp("chain-lite"),
+        "whitelist" -> "some@addon")
+    }
+    e.getMessage should include("taar_lite needs clients_daily columns " +
+      "active_addons")
+  }
+
   it should "dispatch taar_dynamo with the stub sink" in {
     val in = tmp("dyn-in"); val out = tmp("dyn-out")
     Seq(("c1", "2017-01-02", "it", "win", 5L))
