@@ -7,9 +7,12 @@
 # repository's .git gains no worktree entries), builds each there with its
 # own perfbench/build.py, then runs `python3 perfbench/run.py` in pairs,
 # alternating which side goes first (10 pairs by default). Prints, per
-# metric, each side's median and quartiles and the fraction of pairs the
-# new side won (ties count for neither side), plus every run's correctness
-# and failed-operation count.
+# metric, each side's median and quartiles, the pairs the new side won and
+# the ties (values within 1e-9 relative, e.g. float summation jitter), plus
+# every run's correctness and failed-operation count. For each end-to-end
+# metric it then prints the verdict of the gain rule: the new side won at
+# least 9/10 of the pairs that are not ties, and its median is better than
+# the old median by more than the old side's quartile spread (q3 - q1).
 #
 # Environment:
 #   AB_SEED   workload seed (default 1)
@@ -97,24 +100,43 @@ def quartiles(xs):
     return q[0], q[2]
 
 
+def tie(a, b):
+    return abs(a - b) <= 1e-9 * max(abs(a), abs(b))
+
+
+end_to_end = [m["name"] for m in spec["end_to_end"]]
 names = sorted({k for r in runs if r["result"] for k in r["result"]["metrics"]},
-               key=lambda k: (k not in [m["name"] for m in spec["end_to_end"]], k))
+               key=lambda k: (k not in end_to_end, k))
 print(f"  {'metric':32} {'old median [q1, q3]':>28} {'new median [q1, q3]':>28} "
-      f"{'change':>8}  new won")
+      f"{'change':>8}  new won  ties")
+verdicts = []
 for k in names:
     val = {s: {p: by[p][s]["metrics"][k]["value"] for p in by
                if by[p].get(s) and k in by[p][s]["metrics"]} for s in ("old", "new")}
     if not val["old"] or not val["new"]:
         continue
-    row = []
+    row, spread = [], {}
     for s in ("old", "new"):
         xs = sorted(val[s].values())
         lo, hi = quartiles(xs)
+        spread[s] = hi - lo
         row.append(f"{statistics.median(xs):.4g} [{lo:.4g}, {hi:.4g}]")
     both = [p for p in val["old"] if p in val["new"]]
     sign = -1 if better.get(k, "lower") == "lower" else 1
-    won = sum(1 for p in both if sign * (val["new"][p] - val["old"][p]) > 0)
+    ties = sum(1 for p in both if tie(val["new"][p], val["old"][p]))
+    won = sum(1 for p in both if not tie(val["new"][p], val["old"][p])
+              and sign * (val["new"][p] - val["old"][p]) > 0)
     mo, mn = statistics.median(val["old"].values()), statistics.median(val["new"].values())
     change = f"{(mn - mo) / mo * 100:+.1f}%" if mo else "n/a"
-    print(f"  {k:32} {row[0]:>28} {row[1]:>28} {change:>8}  {won}/{len(both)}")
+    print(f"  {k:32} {row[0]:>28} {row[1]:>28} {change:>8}  "
+          f"{f'{won}/{len(both) - ties}':>7}  {ties:>4}")
+    if k in end_to_end:
+        decided = len(both) - ties
+        gain = sign * (mn - mo)
+        ok = decided > 0 and won >= 0.9 * decided and gain > spread["old"]
+        verdicts.append(
+            f"  verdict {k}: {'GAIN' if ok else 'no gain'} "
+            f"(new won {won}/{decided} non-tie pairs, need 9/10; "
+            f"median better by {gain:.4g}, old q3-q1 {spread['old']:.4g})")
+print("\n".join(verdicts))
 EOF
