@@ -43,22 +43,14 @@ object SearchAggregates {
 
   /** aggregates.py:208-284: one row per (ping, search-count entry), plus
     * ad-click and search-with-ads map entries shaped like search counts,
-    * plus a zero row per ping with NULL search_counts.
-    *
-    * The reference unions four branches, each a scan of `ms`; here one
-    * `explode` over the `concat` of four search-count-shaped arrays yields
-    * the same row multiset from one scan. Each piece is coalesced to an
-    * empty array so a NULL input adds no rows, as `explode` of NULL did:
-    *  - `search_counts` with the outlier cap (aggregates.py:226-228); NULL
-    *    elements and NULL counts fail the cap, as they failed the filter;
-    *  - ad-click / search-with-ads map entries (native E3 rewrite of the
-    *    reference UDFs); an absent map column adds nothing, like the
-    *    reference's AnalysisException fallback (aggregates.py:270-273);
-    *  - a zero row when `search_counts` is NULL (aggregates.py:275-284):
-    *    count 0, not NULL, to keep per-user averages easy downstream.
-    *
-    * Output columns: every `ms` column except the three search sources,
-    * then engine/source/count.
+    * plus a zero row per ping with NULL search_counts (count 0, not NULL,
+    * to keep per-user averages easy downstream). Each piece of the concat
+    * is coalesced to an empty array, so a NULL input adds no rows, as
+    * `explode` of NULL did in the union; NULL elements and NULL counts fail
+    * the outlier cap (aggregates.py:226-228). An absent map column adds
+    * nothing, like the reference's AnalysisException fallback
+    * (aggregates.py:270-273). Columns: every `ms` column except the three
+    * search sources, then engine/source/count.
     */
   def explodeSearchCounts(ms: DataFrame): DataFrame = {
     def mapEntries(column: String, sourceTag: String): Option[Column] =
@@ -119,15 +111,10 @@ object SearchAggregates {
   val SearchTypes: Seq[String] = Seq("organic", "tagged-sap",
     "tagged-follow-on", "sap", "unknown", "ad-click", "search-with-ads")
 
-  /** aggregates.py:129-179: aggregate, one column per search type.
-    *
-    * The reference aggregates by (groupingCols, type) and then pivots
-    * `type` with a second `groupBy(...).pivot("type").sum("count")`. `type`
-    * is a function of `source` alone (see [[addDerivedColumns]]), so when
-    * `source` is a grouping column every group holds exactly one type, the
-    * first aggregation's groups are the pivot's groups, and one aggregation
-    * computing `sum(when(type = t, count)) AS t` per type gives the same
-    * rows and columns with one shuffle instead of two.
+  /** aggregates.py:129-179: aggregate, one column per search type. The
+    * reference's second aggregation, `pivot("type").sum("count")` over the
+    * (groupingCols, type) groups, is folded in as `sum(when(type = t,
+    * count))`: with `source` grouped, each group holds one type.
     */
   def aggSearchData(ms: DataFrame, groupingCols: Seq[String],
       aggFunctions: Seq[Column]): DataFrame = {
