@@ -2,6 +2,7 @@
 # Same-window A/B of two revisions on one benchmark workload.
 #
 #   scripts/ab.sh <old-rev> <new-rev> <workload> [pairs]
+#   scripts/ab.sh <old-rev> <new-rev> gates:<g1,g2,...> [pairs]
 #
 # Exports each revision into its own directory (git archive, so the
 # repository's .git gains no worktree entries), builds each there with its
@@ -14,18 +15,29 @@
 # least 9/10 of the pairs that are not ties, and its median is better than
 # the old median by more than the old side's quartile spread (q3 - q1).
 #
+# With `gates:<list>` it runs graft.Bench from each side's build instead,
+# with SPARK_GRAFT_BENCH_ONLY=<list>, in the same alternating pairs. Bench
+# times each gate as a warm-up plus a min of 2-3 runs; per gate this prints
+# each side's minimum over the pairs, the change, and the pairs the new
+# side won. It also prints each side's settled calibration floor (Bench's
+# fixed CPU-bound probe after the gates, min of two samples): a gate that
+# moves by less than that floor has not moved.
+#
 # Environment:
 #   AB_SEED   workload seed (default 1)
 #   AB_TRACE  1 runs with --trace 1 and compares the per-layer metrics
 #   AB_DIR    where the exports, builds and run records go (default: a new
 #             directory under ${TMPDIR:-/tmp}); records land in
 #             $AB_DIR/runs.jsonl, one JSON line per run
+#   AB_SF     gates: mode only: the scale-factor directory Bench reads
+#             (SPARK_GRAFT_SF_DIR; default: Bench's own default)
+#   SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_RUNS pass through to Bench
 #
 # Run length is BENCHMARK.json's run_seconds, the same for both sides.
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
-  echo "usage: $0 <old-rev> <new-rev> <workload> [pairs]" >&2
+  echo "usage: $0 <old-rev> <new-rev> <workload|gates:<g1,g2,...>> [pairs]" >&2
   exit 2
 fi
 old_rev=$1 new_rev=$2 workload=$3 pairs=${4:-10}
@@ -52,12 +64,33 @@ done
 
 records=$work/runs.jsonl
 : > "$records"
+gates=
+case $workload in gates:*) gates=${workload#gates:} ;; esac
+if [ -n "$gates" ] && [ -n "${AB_SF:-}" ]; then
+  export SPARK_GRAFT_SF_DIR=$AB_SF
+fi
+side_cmd() {  # <side dir> <side>: the command of one run, from the side dir
+  if [ -n "$gates" ]; then
+    local opens cp
+    opens=$(python3 -c 'import sys; sys.path.insert(0, "perfbench"); import build
+print(" ".join(build.JVM_OPENS))')
+    cp=$(python3 -c 'import os, sys; sys.path.insert(0, "perfbench"); import build
+print(build.classpath(os.getcwd()))')
+    mkdir -p "$1/.bench_build/tmp"
+    # shellcheck disable=SC2086
+    SPARK_GRAFT_BENCH_ONLY=$gates SPARK_GRAFT_BENCH_OUT=$work/$2.bench.json \
+      java -Xss8m -Xms3g -Xmx3g -XX:-UsePerfData $opens \
+      "-Djava.io.tmpdir=$1/.bench_build/tmp" -cp "$cp" graft.Bench
+  else
+    python3 perfbench/run.py --workload "$workload" --seed "$seed" \
+      --seconds "$seconds" --trace "$trace"
+  fi
+}
 run_side() {  # <pair> <side>
   local dir line
   dir=$work/$2
   echo "[ab] pair $1: $2" >&2
-  if line=$(cd "$dir" && python3 perfbench/run.py --workload "$workload" --seed "$seed" \
-      --seconds "$seconds" --trace "$trace" 2>"$work/$2.stderr" | tail -n 1) \
+  if line=$(cd "$dir" && side_cmd "$dir" "$2" 2>"$work/$2.stderr" | tail -n 1) \
       && [ -n "$line" ]; then
     :
   else
@@ -74,6 +107,48 @@ for ((i = 0; i < pairs; i++)); do
     run_side "$i" new; run_side "$i" old
   fi
 done
+
+if [ -n "$gates" ]; then
+  python3 - "$records" "$old_rev" "$new_rev" "$gates" <<'EOF'
+import json, statistics, sys
+
+records, old_rev, new_rev, gates = sys.argv[1:]
+runs = [json.loads(l) for l in open(records)]
+by = {}
+for r in runs:
+    by.setdefault(r["pair"], {})[r["side"]] = r["result"]
+print(f"A/B Bench gates: old={old_rev} new={new_rev}, {len(by)} pairs, "
+      f"min over the pairs of Bench's per-gate min")
+for side in ("old", "new"):
+    res = [by[p].get(side) for p in sorted(by)]
+    errs = [None if x is None else x["n_err"] for x in res]
+    settled = [x["calibration_mid"][-1][2] for x in res if x and x["calibration_mid"]]
+    floor = (f"settled calibration floor min {min(settled):.3f} s, "
+             f"median {statistics.median(settled):.3f} s") if settled else "no calibration"
+    print(f"  {side}: n_err={errs}; {floor}")
+
+
+def secs(res, g):
+    v = res["queries"].get(g) if res else None
+    return v if isinstance(v, (int, float)) else None
+
+
+print(f"  {'gate':28} {'old min':>9} {'new min':>9} {'change':>8}  new won")
+for g in gates.split(","):
+    val = {s: {p: secs(by[p].get(s), g) for p in by} for s in ("old", "new")}
+    both = [p for p in by if val["old"][p] is not None and val["new"][p] is not None]
+    if not both:
+        errs = {s: [by[p][s]["queries"].get(g) for p in by if by[p].get(s)]
+                for s in ("old", "new")}
+        print(f"  {g:28} no timed pair: {errs}")
+        continue
+    mo = min(val["old"][p] for p in both)
+    mn = min(val["new"][p] for p in both)
+    won = sum(1 for p in both if val["new"][p] < val["old"][p])
+    print(f"  {g:28} {mo:9.3f} {mn:9.3f} {(mn - mo) / mo * 100:+7.1f}%  {won}/{len(both)}")
+EOF
+  exit 0
+fi
 
 python3 - "$records" "$root/BENCHMARK.json" "$old_rev" "$new_rev" "$workload" "$seed" <<'EOF'
 import json, statistics, sys

@@ -21,12 +21,19 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       spark.catalog.clearCache()
+      // residue: RDDs the gate persisted that clearCache could not free
+      // (checkpoint blocks live outside the CacheManager). Compared by id,
+      // not by count: driver GC can unpersist an older RDD meanwhile.
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      if (left.nonEmpty)
+        System.err.println(s"[verify] $name left ${left.size} persisted RDDs")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -309,75 +309,77 @@ object Main {
           o.getOrElse("raw-col", "raw")), required("output"))
 
       case "graphics_dashboard" =>
-        val pings = graphics.Dashboard.normalize(input).cache()
-        val windows = pings.where("OSName = 'Windows'")
-        val tdr = graphics.Dashboard.tdrStatistics(windows)
-        val sys0 = graphics.Dashboard.systemStatistics(pings, windows)
-        val sanity = graphics.Dashboard.sanityTestStatistics(windows)
-        val startup = graphics.Dashboard.startupTestStatistics(pings)
-        val monitors = graphics.Dashboard.monitorStatistics(windows)
-        writeJson(s"${required("output")}/general.json",
-          graphics.Dashboard.generalStatistics(pings))
-        writeJson(s"${required("output")}/by-version.json",
-          graphics.Dashboard.statisticsByFxVersion(pings))
-        writeJson(s"${required("output")}/device-statistics.json",
-          graphics.Dashboard.deviceStatistics(pings))
-        writeJson(s"${required("output")}/tdr-statistics.json", Map(
-          "tdrPings" -> tdr.tdrPings, "results" -> tdr.results,
-          "reasonToVendor" -> tdr.reasonToVendor.map { case (k, v) =>
-            k.toString -> v },
-          "vendorToReason" -> tdr.vendorToReason))
-        writeJson(s"${required("output")}/system-statistics.json", Map(
-          "logical_cores" -> sys0.logicalCores,
-          "x86" -> Map("total" -> sys0.x86Total,
-            "features" -> sys0.x86Features),
-          "memory" -> sys0.memory, "wow" -> sys0.wow))
-        writeJson(s"${required("output")}/sanity-test-statistics.json", Map(
-          "sanityTestPings" -> sanity.sanityTestPings,
-          "totalPings" -> sanity.totalPings, "results" -> sanity.results,
-          "byVendor" -> sanity.byVendor.map { case (k, v) => k.toString -> v },
-          "windows" -> sanity.windows))
-        writeJson(s"${required("output")}/startup-test-statistics.json", Map(
-          "startupTestPings" -> startup.startupTestPings,
-          "results" -> startup.results, "windows" -> startup.windows))
-        writeJson(s"${required("output")}/monitor-statistics.json", Map(
-          "counts" -> monitors.counts,
-          "refreshRates" -> monitors.refreshRates,
-          "resolutions" -> monitors.resolutions))
-        writeJson(s"${required("output")}/mac-statistics.json",
-          graphics.Dashboard.macStatistics(pings))
-        writeJson(s"${required("output")}/linux-statistics.json",
-          graphics.Dashboard.linuxStatistics(pings))
-        val wf = graphics.Dashboard.windowsFeatures(windows)
-        def slice(s: graphics.Dashboard.FeatureSlice) = Map(
-          "count" -> s.count, "compositors" -> s.compositors,
-          "content_backends" -> s.contentBackends, "d3d11" -> s.d3d11,
-          "d2d" -> s.d2d, "warp" -> s.warp,
-          "media_decoders" -> s.mediaDecoders,
-          "gpu_process" -> s.gpuProcess,
-          "advanced_layers" -> s.advancedLayers)
-        writeJson(s"${required("output")}/windows-features.json", Map(
-          "all" -> slice(wf.all),
-          "textureSharing" -> wf.textureSharing,
-          "byVersion" -> wf.byVersion.map { case (v, s) => v -> slice(s) },
-          "d3d11_blacklist" -> Map(
-            "devices" -> wf.blacklistedDevices,
-            "drivers" -> wf.blacklistedDrivers,
-            "os" -> wf.blacklistedOs),
-          "d3d11_blocked" -> Map("vendors" -> wf.blockedVendors)))
-        def outcomes(o: graphics.Dashboard.WebGlOutcomes) = Map(
-          "successes" -> Map("count" -> o.successCount,
-            "os" -> o.successByOs, "compositors" -> o.successByCompositor),
-          "failures" -> Map("count" -> o.failureCount,
-            "os" -> o.failureByOs, "vendors" -> o.failureByVendor,
-            "devices" -> o.failureByDevice, "drivers" -> o.failureByDriver))
-        writeJson(s"${required("output")}/webgl-statistics.json", Map(
-          "webgl1" -> outcomes(
-            graphics.Dashboard.webglOutcomes(pings, "webglSuccess")),
-          "webgl2" -> outcomes(
-            graphics.Dashboard.webglOutcomes(pings, "webgl2Success")),
-          "general" -> graphics.Dashboard.webglFailureIds(pings)))
-        pings.unpersist()
+        graft.core.Lineage.scoped { scope =>
+          val pings = scope.persisted(graphics.Dashboard.normalize(input))
+          val windows = pings.where("OSName = 'Windows'")
+          val tdr = graphics.Dashboard.tdrStatistics(windows)
+          val sys0 = graphics.Dashboard.systemStatistics(pings, windows)
+          val sanity = graphics.Dashboard.sanityTestStatistics(windows)
+          val startup = graphics.Dashboard.startupTestStatistics(pings)
+          val monitors = graphics.Dashboard.monitorStatistics(windows)
+          writeJson(s"${required("output")}/general.json",
+            graphics.Dashboard.generalStatistics(pings))
+          writeJson(s"${required("output")}/by-version.json",
+            graphics.Dashboard.statisticsByFxVersion(pings))
+          writeJson(s"${required("output")}/device-statistics.json",
+            graphics.Dashboard.deviceStatistics(pings))
+          writeJson(s"${required("output")}/tdr-statistics.json", Map(
+            "tdrPings" -> tdr.tdrPings, "results" -> tdr.results,
+            "reasonToVendor" -> tdr.reasonToVendor.map { case (k, v) =>
+              k.toString -> v },
+            "vendorToReason" -> tdr.vendorToReason))
+          writeJson(s"${required("output")}/system-statistics.json", Map(
+            "logical_cores" -> sys0.logicalCores,
+            "x86" -> Map("total" -> sys0.x86Total,
+              "features" -> sys0.x86Features),
+            "memory" -> sys0.memory, "wow" -> sys0.wow))
+          writeJson(s"${required("output")}/sanity-test-statistics.json", Map(
+            "sanityTestPings" -> sanity.sanityTestPings,
+            "totalPings" -> sanity.totalPings, "results" -> sanity.results,
+            "byVendor" -> sanity.byVendor.map { case (k, v) =>
+              k.toString -> v },
+            "windows" -> sanity.windows))
+          writeJson(s"${required("output")}/startup-test-statistics.json", Map(
+            "startupTestPings" -> startup.startupTestPings,
+            "results" -> startup.results, "windows" -> startup.windows))
+          writeJson(s"${required("output")}/monitor-statistics.json", Map(
+            "counts" -> monitors.counts,
+            "refreshRates" -> monitors.refreshRates,
+            "resolutions" -> monitors.resolutions))
+          writeJson(s"${required("output")}/mac-statistics.json",
+            graphics.Dashboard.macStatistics(pings))
+          writeJson(s"${required("output")}/linux-statistics.json",
+            graphics.Dashboard.linuxStatistics(pings))
+          val wf = graphics.Dashboard.windowsFeatures(windows)
+          def slice(s: graphics.Dashboard.FeatureSlice) = Map(
+            "count" -> s.count, "compositors" -> s.compositors,
+            "content_backends" -> s.contentBackends, "d3d11" -> s.d3d11,
+            "d2d" -> s.d2d, "warp" -> s.warp,
+            "media_decoders" -> s.mediaDecoders,
+            "gpu_process" -> s.gpuProcess,
+            "advanced_layers" -> s.advancedLayers)
+          writeJson(s"${required("output")}/windows-features.json", Map(
+            "all" -> slice(wf.all),
+            "textureSharing" -> wf.textureSharing,
+            "byVersion" -> wf.byVersion.map { case (v, s) => v -> slice(s) },
+            "d3d11_blacklist" -> Map(
+              "devices" -> wf.blacklistedDevices,
+              "drivers" -> wf.blacklistedDrivers,
+              "os" -> wf.blacklistedOs),
+            "d3d11_blocked" -> Map("vendors" -> wf.blockedVendors)))
+          def outcomes(o: graphics.Dashboard.WebGlOutcomes) = Map(
+            "successes" -> Map("count" -> o.successCount,
+              "os" -> o.successByOs, "compositors" -> o.successByCompositor),
+            "failures" -> Map("count" -> o.failureCount,
+              "os" -> o.failureByOs, "vendors" -> o.failureByVendor,
+              "devices" -> o.failureByDevice, "drivers" -> o.failureByDriver))
+          writeJson(s"${required("output")}/webgl-statistics.json", Map(
+            "webgl1" -> outcomes(
+              graphics.Dashboard.webglOutcomes(pings, "webglSuccess")),
+            "webgl2" -> outcomes(
+              graphics.Dashboard.webglOutcomes(pings, "webgl2Success")),
+            "general" -> graphics.Dashboard.webglFailureIds(pings)))
+        }
         println(s"[graft] graphics_dashboard wrote ${required("output")}")
 
       case "hardware_report" =>
@@ -470,9 +472,8 @@ object Main {
         // materialize the survivor frame: the dedup stage, the write, and
         // the stats counts would each re-run the quality/contamination
         // passes from scratch otherwise
-        val survivors = decontaminated.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
+        graft.core.Lineage.scoped { scope =>
+          val survivors = scope.persisted(decontaminated)
           val keepers = graft.dedup.Components.nearDupClusters(
               survivors, idCol, textCol,
               bands = o.getOrElse("bands", "4").toInt,
@@ -489,7 +490,7 @@ object Main {
               "curated" -> spark.read.parquet(required("output")).count()))
             println(s"[graft] curate wrote $sp")
           }
-        } finally survivors.unpersist()
+        }
 
       case "profile" =>
         // dataset card: one-pass per-column counts/nulls/cardinality/top
@@ -590,17 +591,16 @@ object Main {
         val fileCol = o.getOrElse("file-col", "file")
         val sizeCol = o.getOrElse("size-col", "size")
         val groups = o.get("group-col").toSeq
-        val plan = graft.core.Compaction.planBins(input, fileCol, sizeCol,
-            required("target-bytes").toLong, groupCols = groups,
-            orderCols = o.get("order-col").toSeq)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        write(plan, required("output"))
-        val nFiles = plan.count()
-        val nBins = graft.core.Compaction.binSummary(plan, sizeCol, groups)
-          .count()
+        val (nFiles, nBins) = graft.core.Lineage.scoped { scope =>
+          val plan = scope.persisted(graft.core.Compaction.planBins(input,
+            fileCol, sizeCol, required("target-bytes").toLong,
+            groupCols = groups, orderCols = o.get("order-col").toSeq))
+          write(plan, required("output"))
+          (plan.count(),
+            graft.core.Compaction.binSummary(plan, sizeCol, groups).count())
+        }
         o.get("stats-output").foreach(p => writeJson(p, Map(
           "n_files" -> nFiles, "n_bins" -> nBins)))
-        plan.unpersist()
         println(s"[graft] compact planned $nFiles files into $nBins bins")
 
       case "drift" =>
@@ -673,45 +673,45 @@ object Main {
           .getOrElse(updates
             .withColumn("valid_from", lit(asOf))
             .withColumn("valid_to", lit(null).cast("string")))
-        val merged = graft.operators.Scd.merge2(history, updates,
-            keys = Seq(idCol), tracked = tracked, asOf = asOf,
-            closeMissing = true)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        write(merged, required("output"))
-        // drift: token JS between today's text and the text of the docs
-        // open BEFORE the merge (ids from prev, text from the snapshot-
-        // lineage --prev-input when given, else skipped on first run)
-        val prevText = o.get("prev-input").map(spark.read.parquet(_))
-        val js = prevText.map { pt =>
-          val row = graft.text.Divergence.jsTokens(snapshot, pt,
-            textCol).head()
-          Map("n_terms" -> row.getLong(0), "tot_a" -> row.getLong(1),
-            "tot_b" -> row.getLong(2),
-            "js_nats" -> (if (row.isNullAt(3)) null else row.getDouble(3)))
-        }.getOrElse(Map.empty[String, Any])
-        val psiPart = (for {
-          pc <- o.get("psi-col"); pt <- prevText
-        } yield {
-          val p = graft.text.Divergence.psi(snapshot, pt, pc,
-            bins = o.getOrElse("psi-bins", "10").toInt).head()
-          Map[String, Any](s"psi_$pc" ->
-            (if (p.isNullAt(3)) null else p.getDouble(3)))
-        }).getOrElse(Map.empty[String, Any])
-        // one aggregation pass for all three merge counters
-        val c = merged.agg(
-          sum(when(col("valid_to").isNull, 1L).otherwise(0L))
-            .as("n_open"),
-          sum(when(col("valid_from") === asOf, 1L).otherwise(0L))
-            .as("n_new_versions"),
-          sum(when(col("valid_to") === asOf, 1L).otherwise(0L))
-            .as("n_closed_today")).head()
-        val report: Map[String, Any] = Map(
-          "as_of" -> asOf,
-          "n_open" -> c.getLong(0),
-          "n_new_versions" -> c.getLong(1),
-          "n_closed_today" -> c.getLong(2)
-        ) ++ js ++ psiPart
-        merged.unpersist(false)
+        val report: Map[String, Any] = graft.core.Lineage.scoped { scope =>
+          val merged = scope.persisted(graft.operators.Scd.merge2(history,
+            updates, keys = Seq(idCol), tracked = tracked, asOf = asOf,
+            closeMissing = true))
+          write(merged, required("output"))
+          // drift: token JS between today's text and the text of the docs
+          // open BEFORE the merge (ids from prev, text from the snapshot-
+          // lineage --prev-input when given, else skipped on first run)
+          val prevText = o.get("prev-input").map(spark.read.parquet(_))
+          val js = prevText.map { pt =>
+            val row = graft.text.Divergence.jsTokens(snapshot, pt,
+              textCol).head()
+            Map("n_terms" -> row.getLong(0), "tot_a" -> row.getLong(1),
+              "tot_b" -> row.getLong(2),
+              "js_nats" -> (if (row.isNullAt(3)) null else row.getDouble(3)))
+          }.getOrElse(Map.empty[String, Any])
+          val psiPart = (for {
+            pc <- o.get("psi-col"); pt <- prevText
+          } yield {
+            val p = graft.text.Divergence.psi(snapshot, pt, pc,
+              bins = o.getOrElse("psi-bins", "10").toInt).head()
+            Map[String, Any](s"psi_$pc" ->
+              (if (p.isNullAt(3)) null else p.getDouble(3)))
+          }).getOrElse(Map.empty[String, Any])
+          // one aggregation pass for all three merge counters
+          val c = merged.agg(
+            sum(when(col("valid_to").isNull, 1L).otherwise(0L))
+              .as("n_open"),
+            sum(when(col("valid_from") === asOf, 1L).otherwise(0L))
+              .as("n_new_versions"),
+            sum(when(col("valid_to") === asOf, 1L).otherwise(0L))
+              .as("n_closed_today")).head()
+          Map[String, Any](
+            "as_of" -> asOf,
+            "n_open" -> c.getLong(0),
+            "n_new_versions" -> c.getLong(1),
+            "n_closed_today" -> c.getLong(2)
+          ) ++ js ++ psiPart
+        }
         writeJson(required("stats-output"), report)
         println(s"[graft] monitor wrote ${required("stats-output")}")
 

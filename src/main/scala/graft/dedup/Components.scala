@@ -65,27 +65,33 @@ object Components {
     // Materialize the (possibly expensive — MinHash LSH) edge lineage
     // exactly once; the size probe, the symmetrize, and every loop
     // iteration read the checkpoint, never the lineage.
-    val e = edges
-      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
-        col(srcCol) =!= col(dstCol))
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .localCheckpoint()
-    if (e.count() <= localEdgeThreshold) {
-      val spark = e.sparkSession
-      import spark.implicits._
-      val pairs = e.as[(Long, Long)].collect()
-      val result = localUnionFind(pairs).toSeq.toDF("id", "comp")
-      e.unpersist()
-      return result
+    graft.core.Lineage.scoped { scope =>
+      val e = scope.cut(edges
+        .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
+          col(srcCol) =!= col(dstCol))
+        .select(col(srcCol).cast("long").as("src"),
+          col(dstCol).cast("long").as("dst")), eager = true)
+      if (e.count() <= localEdgeThreshold) {
+        val spark = e.sparkSession
+        import spark.implicits._
+        localUnionFind(e.as[(Long, Long)].collect()).toSeq.toDF("id", "comp")
+      } else graft.core.Lineage.materialized { rounds =>
+        val sym = rounds.cut(e
+          .union(e.select(col("dst").as("src"), col("src").as("dst")))
+          .distinct(), eager = true)
+        scope.release(e)
+        minLabelLoop(sym, maxIter, rounds)
+      }
     }
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint()
-    e.unpersist()
+  }
 
-    var labels = sym.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("comp"))
-      .localCheckpoint()
+  /** The distributed min-label loop over the symmetric edge list `sym`;
+    * each round's labels are cut and the previous round's released.
+    */
+  private def minLabelLoop(sym: DataFrame, maxIter: Int,
+      scope: graft.core.Lineage.Scope): DataFrame = {
+    var labels = scope.cut(sym.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("comp")), eager = true)
     def labelSum(df: DataFrame): java.math.BigDecimal =
       df.agg(coalesce(
           sum(col("comp").cast(org.apache.spark.sql.types.DecimalType(38, 0))),
@@ -109,17 +115,17 @@ object Components {
       // the self-join always finds it; inner join is safe but left keeps
       // the invariant obvious.
       val byId = propagated.select(col("id").as("cid"), col("comp").as("ccomp"))
-      val jumped = propagated.join(byId, propagated("comp") === byId("cid"), "left")
-        .select(propagated("id"), coalesce(col("ccomp"), col("comp")).as("comp"))
-        .localCheckpoint()
+      val jumped = scope.cut(
+        propagated.join(byId, propagated("comp") === byId("cid"), "left")
+          .select(propagated("id"),
+            coalesce(col("ccomp"), col("comp")).as("comp")), eager = true)
       val s = labelSum(jumped)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
-      labels.unpersist()
+      scope.release(labels)
       labels = jumped
       iter += 1
     }
-    sym.unpersist()
     labels
   }
 

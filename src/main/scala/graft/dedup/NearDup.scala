@@ -251,7 +251,7 @@ object NearDup {
       maxBucketSize: Int = 0): DataFrame = {
     // NOTE on reuse: the band-key frame feeds both sides of the self-join;
     // Catalyst's ReuseExchange deduplicates the identical subplans, and
-    // measured at sf0.1 an explicit .cache() here is a net LOSS (array
+    // measured at sf0.1 an explicit cache here is a net LOSS (array
     // serialization + broken pipelining cost more than the recompute).
     val keys0 = bandKeys(sig, numHashes, bands)
     val keys =
@@ -340,55 +340,39 @@ object NearDup {
     * token-keyed shuffles (frequency attach, prefix self-join) and one
     * id-keyed verify join; documents never shuffle.
     */
-  /** @param materialize the peel/Hits lifecycle convention: true
-    *   (default) eagerly evaluates the pair frame, releases the
-    *   corpus-sized shingle cache, and returns a PERSISTED frame the
-    *   CALLER owns (unpersist it, or clearCache as the bench/verify
-    *   harnesses do); false returns the lazy plan still backed by the
-    *   shingle cache — the caller must evaluate before releasing.
-    */
   def prefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, threshold: Double = 0.8,
-      materialize: Boolean = true): DataFrame = {
+      n: Int = 3, threshold: Double = 0.8): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    import org.apache.spark.storage.StorageLevel
-    // Persist the shingle sets: they feed the inverted index (occ → freq
-    // and occ → ordered are two scans) AND both sides of the verify join
-    // — without the cache the tokenize+shingle pipeline re-executes per
-    // consumer (guide §2.4). Released eagerly below.
-    val sets = shingleSets(df, idCol, textCol, n)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val occ = sets.select(col("id"), explode(col("shingle_set")).as("s"))
-    val freq = occ.groupBy("s").agg(count(lit(1)).as("cnt"))
-    // global rare-first total order, ties broken on the token itself so
-    // every engine/run derives the same prefix
-    val ordered = occ.join(freq, "s")
-      .groupBy("id")
-      .agg(array_sort(collect_list(struct(col("cnt"), col("s"))))
-        .as("ord"))
-      .select(col("id"), col("ord"), size(col("ord")).as("sz"))
-    val prefixLen =
-      (col("sz") - ceil(col("sz") * lit(threshold)) + 1).cast("int")
-    val prefixes = ordered
-      .select(col("id"), col("sz"),
-        explode(slice(col("ord"), lit(1), prefixLen)).as("p"))
-      .select(col("id"), col("sz"), col("p.s").as("s"))
-    val cand = prefixes.alias("a").join(prefixes.alias("b"),
-        col("a.s") === col("b.s") && col("a.id") < col("b.id") &&
-          col("b.sz").cast("double") >= col("a.sz") * lit(threshold) &&
-          col("a.sz").cast("double") >= col("b.sz") * lit(threshold))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    val out = verifyPairs(cand, sets, threshold)
-    if (materialize) {
-      // eager lifecycle (the PageRank convention): materialize the pair
-      // frame, release the corpus-sized shingle cache before returning
-      val res = out.persist(StorageLevel.MEMORY_AND_DISK)
-      res.count()
-      sets.unpersist(false)
-      res
-    } else out
+    graft.core.Lineage.materialized { scope =>
+      // Persist the shingle sets: they feed the inverted index (occ → freq
+      // and occ → ordered are two scans) AND both sides of the verify join
+      // — without the cache the tokenize+shingle pipeline re-executes per
+      // consumer (guide §2.4).
+      val sets = scope.persisted(shingleSets(df, idCol, textCol, n))
+      val occ = sets.select(col("id"), explode(col("shingle_set")).as("s"))
+      val freq = occ.groupBy("s").agg(count(lit(1)).as("cnt"))
+      // global rare-first total order, ties broken on the token itself so
+      // every engine/run derives the same prefix
+      val ordered = occ.join(freq, "s")
+        .groupBy("id")
+        .agg(array_sort(collect_list(struct(col("cnt"), col("s"))))
+          .as("ord"))
+        .select(col("id"), col("ord"), size(col("ord")).as("sz"))
+      val prefixLen =
+        (col("sz") - ceil(col("sz") * lit(threshold)) + 1).cast("int")
+      val prefixes = ordered
+        .select(col("id"), col("sz"),
+          explode(slice(col("ord"), lit(1), prefixLen)).as("p"))
+        .select(col("id"), col("sz"), col("p.s").as("s"))
+      val cand = prefixes.alias("a").join(prefixes.alias("b"),
+          col("a.s") === col("b.s") && col("a.id") < col("b.id") &&
+            col("b.sz").cast("double") >= col("a.sz") * lit(threshold) &&
+            col("a.sz").cast("double") >= col("b.sz") * lit(threshold))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+        .distinct()
+      verifyPairs(cand, sets, threshold)
+    }
   }
 
   /** MinHash-LSH candidates verified at containment ≥ threshold. */

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Lineage
 
 /** Degree assortativity (Newman 2002, PRL 89.208701) — the one-number
   * answer to "do hubs link to hubs?": the Pearson correlation of
@@ -38,26 +39,18 @@ object Assortativity {
     */
   val MaxBroadcastNodes: Long = 1000000L
 
-  /** @param materialize the peel/Hits lifecycle convention: true
-    *   (default) eagerly evaluates the 1-row result, releases the
-    *   graph-sized internals, and returns a PERSISTED frame the CALLER
-    *   owns (unpersist, or harness clearCache); false returns the lazy
-    *   plan backed by the internal caches — evaluate before releasing.
-    */
   def degreeCorrelation(edges: DataFrame, srcCol: String,
-      dstCol: String, materialize: Boolean = true): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+      dstCol: String): DataFrame = Lineage.materialized { scope =>
     // Persist the directed edge list: the symmetric union's branches and
     // the degree/moments passes otherwise re-execute the caller's edge
     // lineage (the q84 gate's join+distinct ran 3× in the r18 profile —
     // guide §2.4). The degree table is persisted too: it is consumed by
     // two joins (and its count gates the broadcast decision).
-    val e0 = edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e0 = scope.persisted(
+      edges.select(col(srcCol).as("s"), col(dstCol).as("d")))
     val sym = e0.union(e0.select(col("d").as("s"), col("s").as("d")))
-    val deg = sym.groupBy(col("s").as("id"))
-      .agg(count(lit(1)).as("deg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val deg = scope.persisted(sym.groupBy(col("s").as("id"))
+      .agg(count(lit(1)).as("deg")))
     val n = deg.count()
     def degSide(key: String, out: String): DataFrame = {
       val side = deg.select(col("id").as(key), col("deg").as(out))
@@ -73,16 +66,7 @@ object Assortativity {
     def dbl(name: String): Column = col(name).cast("double")
     val num = dbl("m2") * dbl("sum_xy") - dbl("sum_x") * dbl("sum_x")
     val den = dbl("m2") * dbl("sum_xx") - dbl("sum_x") * dbl("sum_x")
-    val out = m.select(col("m2"), col("sum_x"), col("sum_xx"),
+    m.select(col("m2"), col("sum_x"), col("sum_xx"),
       col("sum_xy"), when(den > 0.0, num / den).as("assortativity"))
-    if (materialize) {
-      // eager lifecycle (the PageRank convention): materialize the 1-row
-      // result, release the graph-sized internals before returning
-      val res = out.persist(StorageLevel.MEMORY_AND_DISK)
-      res.count()
-      e0.unpersist(false)
-      deg.unpersist(false)
-      res
-    } else out
   }
 }

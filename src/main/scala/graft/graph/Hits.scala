@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.core.Lineage
 
 /** HITS hubs and authorities (Kleinberg, JACM 1999) — the directed /
   * bipartite ranking X34's PageRank doesn't give: on a who-consumes-what
@@ -23,8 +23,8 @@ import org.apache.spark.storage.StorageLevel
   * sum; the renorm denominator is a 1-row aggregate of the persisted
   * sums COLLECTED to the driver and inlined as a literal (the k-means
   * model-bounded convention — one long, not a broadcast exchange per
-  * half-round). The edge list is cached across rounds with the
-  * LabelProp/PageRank lifecycle (one eager count at the end, everything
+  * half-round). The edge list is cut once and intermediates follow the
+  * `Lineage` lifecycle (one eager count at the end, everything
   * released).
   */
 object Hits {
@@ -51,99 +51,62 @@ object Hits {
     * final renormalization.
     */
   def hubsAndAuthorities(edges: DataFrame, srcCol: String, dstCol: String,
-      rounds: Int, materialize: Boolean = true): DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    // Lazy mode keeps the renorm denominator as a broadcast 1-row total
-    // that references the raw sums TWICE, and each round nests the
-    // previous renorm — the LOGICAL plan grows ~4^rounds nodes. Exchange
-    // reuse keeps execution linear, but analyzer/optimizer time and
-    // driver memory do not amortize; past ~5 rounds plan compilation
-    // dominates. Budgeted iteration at larger round counts belongs on
-    // the eager path (collected-literal denominators, O(rounds) plan).
-    require(materialize || rounds <= 5,
-      s"materialize=false builds a ~4^rounds logical plan; got $rounds " +
-        "rounds — use materialize=true (eager, O(rounds) plan) past 5")
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def keep(df: DataFrame): DataFrame =
-      if (!materialize) df
-      else { cached += df.persist(StorageLevel.MEMORY_AND_DISK); df }
-    // CUT the edge list's lineage, don't just persist it (r19): every
-    // half-round's plan otherwise re-analyzes the caller's full edge
-    // derivation (q74's plan was 6,257 lines with a persist alone) — a
-    // 2·rounds-deep nest of joins each carrying the upstream subtree, so
-    // driver plan time grows with rounds while execution doesn't. Lazy
-    // mode keeps the no-jobs-at-construction contract.
-    val eraw = edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
-      .filter(col("s").isNotNull && col("d").isNotNull)
-      .distinct()
-    val e = if (materialize) graft.core.Lineage.cut(eraw) else eraw
-    // One eager count materializes the edge cut AND gates the broadcast
-    // decision for every half-round's score side (lazy mode keeps the
-    // planner's choice: no count job, no hint).
-    val bcastScores = materialize && e.count() <= MaxBroadcastEdges
-    def scoreSide(df: DataFrame): DataFrame =
-      if (bcastScores) broadcast(df) else df
-    // h0 is consumed exactly once (round 1's join) — caching it would be
-    // a pure materialization pass; it recomputes cheaply from cached e.
-    var hubs = e.select(col("s").as("node")).distinct()
-      .withColumn("score", lit(Scale))
-    var auths: DataFrame = null
-    // Persist the RAW per-node sums, not the renormalized frames: the
-    // renorm's 1-row total executes as a separate broadcast job, and with
-    // the raw aggregate cached that job is a cache scan + tiny agg instead
-    // of a second execution of the join+groupBy (which the r10 bench
-    // showed doubling every half-round's work — q74's dominant cost).
-    // The renorm projection itself is lazy and recomputes from the same
-    // cache wherever it is consumed.
-    for (_ <- 1 to rounds) {
-      val aRaw = keep(
-        e.join(scoreSide(hubs.select(col("node").as("s"), col("score"))),
-            "s")
-          .groupBy(col("d").as("node"))
-          .agg(sum("score").as("raw")))
-      auths = renorm(aRaw, materialize)
-      val hRaw = keep(
-        e.join(scoreSide(auths.select(col("node").as("d"), col("score"))),
-            "d")
-          .groupBy(col("s").as("node"))
-          .agg(sum("score").as("raw")))
-      hubs = renorm(hRaw, materialize)
+    Lineage.materialized { scope =>
+      // CUT the edge list's lineage, don't just persist it (r19): every
+      // half-round's plan otherwise re-analyzes the caller's full edge
+      // derivation (q74's plan was 6,257 lines with a persist alone) — a
+      // 2·rounds-deep nest of joins each carrying the upstream subtree,
+      // so driver plan time grows with rounds while execution doesn't.
+      val e = scope.cut(edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
+        .filter(col("s").isNotNull && col("d").isNotNull)
+        .distinct(), eager = false)
+      // One eager count materializes the edge cut AND gates the broadcast
+      // decision for every half-round's score side.
+      val bcastScores = e.count() <= MaxBroadcastEdges
+      def scoreSide(df: DataFrame): DataFrame =
+        if (bcastScores) broadcast(df) else df
+      // h0 is consumed exactly once (round 1's join) — caching it would be
+      // a pure materialization pass; it recomputes cheaply from cached e.
+      var hubs = e.select(col("s").as("node")).distinct()
+        .withColumn("score", lit(Scale))
+      var auths: DataFrame = null
+      // Persist the RAW per-node sums, not the renormalized frames: the
+      // renorm total is collected from the cache (a cache scan + tiny agg
+      // instead of a second execution of the join+groupBy, which the r10
+      // bench showed doubling every half-round's work — q74's dominant
+      // cost). The renorm projection itself is lazy and recomputes from
+      // the same cache wherever it is consumed.
+      for (_ <- 1 to rounds) {
+        auths = renorm(scope.persisted(
+          e.join(scoreSide(hubs.select(col("node").as("s"), col("score"))),
+              "s")
+            .groupBy(col("d").as("node"))
+            .agg(sum("score").as("raw"))))
+        hubs = renorm(scope.persisted(
+          e.join(scoreSide(auths.select(col("node").as("d"), col("score"))),
+              "d")
+            .groupBy(col("s").as("node"))
+            .agg(sum("score").as("raw"))))
+      }
+      hubs.select(col("node"), lit("hub").as("role"), col("score"))
+        .unionByName(auths.select(col("node"), lit("authority").as("role"),
+          col("score")))
     }
-    val out = hubs.select(col("node"), lit("hub").as("role"), col("score"))
-      .unionByName(auths.select(col("node"), lit("authority").as("role"),
-        col("score")))
-    if (materialize) {
-      val m = out.persist(StorageLevel.MEMORY_AND_DISK)
-      m.count()
-      cached.foreach(_.unpersist(false))
-      graft.core.Lineage.release(e)
-      m
-    } else out
   }
 
   /** a ← a div max(1, Σa div Scale): exact integral renormalization —
-    * the largest score lands near Scale, every op is a long.
-    *
-    * Eager (persisted) path: the denominator is ONE long collected from
-    * the persisted sums (driver-model-bounded); inlining it as a literal
-    * keeps each half-round at a single distributed job instead of an
-    * extra broadcast exchange. Lazy (materialize=false) path: the raw
-    * sums are NOT persisted, so an eager `.head()` per half-round would
-    * recompute the full prior lineage quadratically and launch 2·rounds
-    * jobs at construction — there the denominator stays a lazy broadcast
-    * 1-row total instead.
+    * the largest score lands near Scale, every op is a long. The
+    * denominator is ONE long collected from the persisted sums
+    * (driver-model-bounded); inlining it as a literal keeps each
+    * half-round at a single distributed job instead of an extra
+    * broadcast exchange.
     */
-  private def renorm(raw: DataFrame, eager: Boolean): DataFrame = {
-    if (eager) {
-      val totalRow = raw.agg(expr(s"sum(raw) div ${Scale}L")).head()
-      val denom = if (totalRow.isNullAt(0)) 1L
-        else math.max(totalRow.getLong(0), 1L)
-      raw.select(col("node"), expr(s"raw div ${denom}L").as("score"))
-    } else {
-      val tot = raw.agg(
-        greatest(expr(s"sum(raw) div ${Scale}L"), lit(1L)).as("denom"))
-      raw.crossJoin(broadcast(tot))
-        .select(col("node"), expr("raw div denom").as("score"))
-    }
+  private def renorm(raw: DataFrame): DataFrame = {
+    val totalRow = raw.agg(expr(s"sum(raw) div ${Scale}L")).head()
+    val denom = if (totalRow.isNullAt(0)) 1L
+      else math.max(totalRow.getLong(0), 1L)
+    raw.select(col("node"), expr(s"raw div ${denom}L").as("score"))
   }
 }

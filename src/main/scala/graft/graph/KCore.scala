@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Lineage
 
 /** Budgeted k-core peeling — the density filter that separates a graph's
   * connected SHELL from its cohesive CORE. Components (`dedup/
@@ -24,8 +25,8 @@ import org.apache.spark.sql.functions._
   * Scale: per round, the edge list (cached once — often the expensive
   * lineage) is semi-joined against the shrinking survivor set on each
   * endpoint, then ONE map-side-combined degree count. Survivor sets are
-  * 8 bytes/node; edges never carry payloads. Cache lifecycle follows
-  * PageRank.ranks (eager materialize + release by default).
+  * 8 bytes/node; edges never carry payloads. Intermediates follow the
+  * `Lineage` lifecycle.
   */
 object KCore {
 
@@ -39,48 +40,37 @@ object KCore {
     * subgraph — i.e. one more degree pass after the final peel.
     */
   def peel(nodes: DataFrame, idCol: String, edges: DataFrame,
-      srcCol: String, dstCol: String, k: Int, rounds: Int,
-      materialize: Boolean = true): DataFrame = {
+      srcCol: String, dstCol: String, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(rounds >= 1, "rounds must be >= 1")
-    import org.apache.spark.storage.StorageLevel
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def keep(df: DataFrame): DataFrame =
-      if (!materialize) df
-      else { cached += df.persist(StorageLevel.MEMORY_AND_DISK); df }
-    // CUT the directed edge list's lineage before symmetrizing (r19):
-    // the union's two branches each re-execute the caller's edge
-    // derivation, and every round's plan re-analyzes it (see
-    // Lineage.cut). Lazy mode keeps the no-jobs contract.
-    val e0raw = edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
-    val e0 = if (materialize) graft.core.Lineage.cut(e0raw) else e0raw
-    // pre-partition the cached edge list by the degree key: every
-    // round's degree count then reuses the cached layout instead of
-    // re-exchanging the (largest) frame per round — the survivor-set
-    // semi-joins broadcast and preserve partitioning (measured 103 MB
-    // → edge-sized-once shuffle on the q79 gate)
-    val sym = keep(e0
-      .union(e0.select(col("d").as("s"), col("s").as("d")))
-      .repartition(col("s")))
-    def degrees(alive: DataFrame): DataFrame =
-      sym.join(alive.select(col("id").as("s")), Seq("s"), "left_semi")
-        .join(alive.select(col("id").as("d")), Seq("d"), "left_semi")
-        .groupBy(col("s").as("id"))
-        .agg(count(lit(1)).as("degree"))
-    var alive = nodes.select(col(idCol).as("id"))
-    for (_ <- 1 to rounds)
-      alive = keep(degrees(alive).filter(col("degree") >= k)
-        .select(col("id")))
-    val out = degrees(alive)
-      .select(col("id").as(idCol), col("degree"))
-    if (materialize) {
-      val m = out.persist(StorageLevel.MEMORY_AND_DISK)
-      m.count()
-      cached.foreach(_.unpersist(false))
-      graft.core.Lineage.release(e0)
-      m
-    } else out
+    Lineage.materialized { scope =>
+      // CUT the directed edge list's lineage before symmetrizing (r19):
+      // the union's two branches each re-execute the caller's edge
+      // derivation, and every round's plan re-analyzes it (see Lineage).
+      val e0 = scope.cut(edges.select(col(srcCol).as("s"), col(dstCol).as("d")),
+        eager = false)
+      // pre-partition the cached edge list by the degree key: every
+      // round's degree count then reuses the cached layout instead of
+      // re-exchanging the (largest) frame per round — the survivor-set
+      // semi-joins broadcast and preserve partitioning (measured 103 MB
+      // → edge-sized-once shuffle on the q79 gate)
+      val sym = scope.persisted(e0
+        .union(e0.select(col("d").as("s"), col("s").as("d")))
+        .repartition(col("s")))
+      var alive = nodes.select(col(idCol).as("id"))
+      for (_ <- 1 to rounds)
+        alive = scope.persisted(degrees(sym, alive)
+          .filter(col("degree") >= k).select(col("id")))
+      degrees(sym, alive).select(col("id").as(idCol), col("degree"))
+    }
   }
+
+  /** Degree of every survivor within the survivor subgraph of `sym`. */
+  private def degrees(sym: DataFrame, alive: DataFrame): DataFrame =
+    sym.join(alive.select(col("id").as("s")), Seq("s"), "left_semi")
+      .join(alive.select(col("id").as("d")), Seq("d"), "left_semi")
+      .groupBy(col("s").as("id"))
+      .agg(count(lit(1)).as("degree"))
 
   /** Peel with the node universe IMPLICITLY the edge endpoints —
     * equivalent to `peel(endpoints, …)` and strictly cheaper: any node
@@ -98,43 +88,27 @@ object KCore {
     *    endpoint is alive at round 0, so they are identity filters.
     */
   def peelEdges(edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, rounds: Int, idCol: String = "id",
-      materialize: Boolean = true): DataFrame = {
+      k: Int, rounds: Int, idCol: String = "id"): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(rounds >= 1, "rounds must be >= 1")
-    import org.apache.spark.storage.StorageLevel
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def keep(df: DataFrame): DataFrame =
-      if (!materialize) df
-      else { cached += df.persist(StorageLevel.MEMORY_AND_DISK); df }
-    // CUT (not just persist) the directed edge list's lineage: with a
-    // persist alone the q79 plan was 6,764 lines — every round's plan
-    // re-analyzed the caller's join+distinct edge derivation (see
-    // Lineage.cut). Lazy mode keeps the no-jobs contract.
-    val e0raw = edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
-    val e0 = if (materialize) graft.core.Lineage.cut(e0raw) else e0raw
-    val sym = keep(e0.union(e0.select(col("d").as("s"), col("s").as("d")))
-      .repartition(col("s")))
-    def degrees(alive: DataFrame): DataFrame =
-      sym.join(alive.select(col("id").as("s")), Seq("s"), "left_semi")
-        .join(alive.select(col("id").as("d")), Seq("d"), "left_semi")
-        .groupBy(col("s").as("id"))
-        .agg(count(lit(1)).as("degree"))
-    // round 1: every endpoint is alive — degree is a plain aggregation
-    var alive = keep(
-      sym.groupBy(col("s").as("id")).agg(count(lit(1)).as("degree"))
-        .filter(col("degree") >= k).select(col("id")))
-    for (_ <- 2 to rounds)
-      alive = keep(degrees(alive).filter(col("degree") >= k)
-        .select(col("id")))
-    val out = degrees(alive)
-      .select(col("id").as(idCol), col("degree"))
-    if (materialize) {
-      val m = out.persist(StorageLevel.MEMORY_AND_DISK)
-      m.count()
-      cached.foreach(_.unpersist(false))
-      graft.core.Lineage.release(e0)
-      m
-    } else out
+    Lineage.materialized { scope =>
+      // CUT (not just persist) the directed edge list's lineage: with a
+      // persist alone the q79 plan was 6,764 lines — every round's plan
+      // re-analyzed the caller's join+distinct edge derivation (see
+      // Lineage).
+      val e0 = scope.cut(edges.select(col(srcCol).as("s"), col(dstCol).as("d")),
+        eager = false)
+      val sym = scope.persisted(e0
+        .union(e0.select(col("d").as("s"), col("s").as("d")))
+        .repartition(col("s")))
+      // round 1: every endpoint is alive — degree is a plain aggregation
+      var alive = scope.persisted(
+        sym.groupBy(col("s").as("id")).agg(count(lit(1)).as("degree"))
+          .filter(col("degree") >= k).select(col("id")))
+      for (_ <- 2 to rounds)
+        alive = scope.persisted(degrees(sym, alive)
+          .filter(col("degree") >= k).select(col("id")))
+      degrees(sym, alive).select(col("id").as(idCol), col("degree"))
+    }
   }
 }

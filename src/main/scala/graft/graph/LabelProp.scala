@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Lineage
 
 /** Synchronous label propagation — community detection over a similarity
   * graph (the near-dup candidate graph, the TAAR guid-guid co-install
@@ -44,94 +45,77 @@ object LabelProp {
     * round-`rounds` label and sizes count the final assignment.
     */
   def propagate(nodes: DataFrame, idCol: String, edges: DataFrame,
-      srcCol: String, dstCol: String, rounds: Int,
-      materialize: Boolean = true): DataFrame = {
+      srcCol: String, dstCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    import org.apache.spark.storage.StorageLevel
-    // The edge list is referenced once per round and is often the
-    // expensive lineage (the near-dup generator runs MinHash + verify).
-    // Without caching, evaluation re-runs the edge lineage per round and
-    // doubles the label chain per round — measured 7.0 s vs 1.3 s on the
-    // d23 gate. The caches are LAZY (no per-round jobs);
-    // `materialize = true` (default) runs the one eager count at the end
-    // and releases every intermediate, the PageRank.ranks lifecycle
-    // (PageRank.scala:134-150).
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def keep(df: DataFrame): DataFrame =
-      if (!materialize) df
-      else { cached += df.persist(StorageLevel.MEMORY_AND_DISK); df }
-    val universe = nodes.select(col(idCol).as("id"))
-    // Restrict the edge list to universe × universe ONCE, up front —
-    // semantically identical to the original formulation (an endpoint
-    // outside `nodes` never carried a label, so it neither cast votes
-    // nor kept winner rows), and it guarantees every node of the
-    // restricted graph receives >= 1 vote per round (its neighbors all
-    // carry labels), which the round loop below relies on.
-    // CUT the DIRECTED restricted edge list's lineage BEFORE symmetrizing
-    // (r18 persisted it; r19 truncates the plan too): the union's two
-    // branches otherwise each re-execute the whole edge lineage (for the
-    // d23 gate that lineage is the MinHash-LSH candidate generator +
-    // verify join — the gate's single most expensive subtree), and with
-    // a persist alone every ROUND's plan still re-analyzes that lineage —
-    // the d23 plan was 51,978 lines and driver/plan time owned the gate
-    // (Lineage.cut scaladoc has the numbers). Lazy mode keeps the
-    // caller-managed no-jobs-at-construction contract.
-    val e0raw = edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
-      .join(universe.select(col("id").as("s")), Seq("s"), "left_semi")
-      .join(universe.select(col("id").as("d")), Seq("d"), "left_semi")
-    val e0 = if (materialize) graft.core.Lineage.cut(e0raw) else e0raw
-    val sym = keep(e0.select(col("s"), col("d"))
-      .union(e0.select(col("d").as("s"), col("s").as("d"))))
-    // One eager count materializes the restricted-edge cut AND gates a
-    // broadcast hint for the per-round label side and the touched-set
-    // anti-join (labels/touched ≤ 2·|E| rows): without it the planner
-    // sees the cache's placeholder statistics and plans sort-merge
-    // joins whose exchanges run every round (the Hits.MaxBroadcastEdges
-    // rationale). Lazy mode keeps the planner's choice — no count job.
-    val bcastLabels = materialize &&
-      e0.count() <= graft.graph.Hits.MaxBroadcastEdges
-    def small(df: DataFrame): DataFrame =
-      if (bcastLabels) broadcast(df) else df
-    // Only edge-touched nodes can ever change label (an isolated node
-    // receives no votes in any round and keeps its own id), so the round
-    // loop rides the touched set alone and the isolated complement joins
-    // back ONCE at the end — r11 restructure that drops the per-round
-    // carry-forward join. Every touched node receives >= 1 vote every
-    // round (the symmetrized list puts each endpoint on the d side and
-    // its neighbors always carry labels), so the winner frame covers the
-    // touched set exactly and no per-round coalesce is needed.
-    val touched = keep(sym.select(col("d").as("id")).distinct())
-    var labels = touched.withColumn("lab", col("id"))
-    for (_ <- 1 to rounds) {
-      // vote count + argmax FUSED into one aggregation: deterministic
-      // mode(nl, true) returns the most frequent neighbor label with ties
-      // broken by the LOWEST value — exactly the (max count, min label)
-      // rule — as a single map-side-combined ObjectHashAggregate whose
-      // per-group state is bounded by the node's distinct neighbor labels
-      // (degree-capped upstream). One exchange per round, where the
-      // count-then-min_by formulation paid two (measured ~0.35 s/stage of
-      // fixed overhead on tiny fixed-point graphs).
-      labels = keep(sym
-        .join(small(labels.select(col("id").as("s"), col("lab").as("nl"))),
-          "s")
-        .groupBy(col("d").as("id"))
-        .agg(expr("mode(nl, true)").as("lab")))
+    Lineage.materialized { scope =>
+      val universe = nodes.select(col(idCol).as("id"))
+      // Restrict the edge list to universe × universe ONCE, up front —
+      // semantically identical to the original formulation (an endpoint
+      // outside `nodes` never carried a label, so it neither cast votes
+      // nor kept winner rows), and it guarantees every node of the
+      // restricted graph receives >= 1 vote per round (its neighbors all
+      // carry labels), which the round loop below relies on.
+      // CUT the DIRECTED restricted edge list's lineage BEFORE
+      // symmetrizing (r18 persisted it; r19 truncates the plan too): the
+      // union's two branches otherwise each re-execute the whole edge
+      // lineage (for the d23 gate that lineage is the MinHash-LSH
+      // candidate generator + verify join — the gate's single most
+      // expensive subtree), and with a persist alone every ROUND's plan
+      // still re-analyzes that lineage — the d23 plan was 51,978 lines
+      // and driver/plan time owned the gate (see Lineage). Without any
+      // caching, evaluation re-runs the edge lineage per round and
+      // doubles the label chain per round — measured 7.0 s vs 1.3 s on
+      // the d23 gate.
+      val e0 = scope.cut(edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
+        .join(universe.select(col("id").as("s")), Seq("s"), "left_semi")
+        .join(universe.select(col("id").as("d")), Seq("d"), "left_semi"),
+        eager = false)
+      val sym = scope.persisted(e0.select(col("s"), col("d"))
+        .union(e0.select(col("d").as("s"), col("s").as("d"))))
+      // One eager count materializes the restricted-edge cut AND gates a
+      // broadcast hint for the per-round label side and the touched-set
+      // anti-join (labels/touched ≤ 2·|E| rows): without it the planner
+      // sees the cache's placeholder statistics and plans sort-merge
+      // joins whose exchanges run every round (the Hits.MaxBroadcastEdges
+      // rationale).
+      val bcastLabels = e0.count() <= graft.graph.Hits.MaxBroadcastEdges
+      def small(df: DataFrame): DataFrame =
+        if (bcastLabels) broadcast(df) else df
+      // Only edge-touched nodes can ever change label (an isolated node
+      // receives no votes in any round and keeps its own id), so the round
+      // loop rides the touched set alone and the isolated complement joins
+      // back ONCE at the end — r11 restructure that drops the per-round
+      // carry-forward join. Every touched node receives >= 1 vote every
+      // round (the symmetrized list puts each endpoint on the d side and
+      // its neighbors always carry labels), so the winner frame covers the
+      // touched set exactly and no per-round coalesce is needed.
+      val touched = scope.persisted(sym.select(col("d").as("id")).distinct())
+      var labels = touched.withColumn("lab", col("id"))
+      for (_ <- 1 to rounds) {
+        // vote count + argmax FUSED into one aggregation: deterministic
+        // mode(nl, true) returns the most frequent neighbor label with
+        // ties broken by the LOWEST value — exactly the (max count, min
+        // label) rule — as a single map-side-combined ObjectHashAggregate
+        // whose per-group state is bounded by the node's distinct
+        // neighbor labels (degree-capped upstream). One exchange per
+        // round, where the count-then-min_by formulation paid two
+        // (measured ~0.35 s/stage of fixed overhead on tiny fixed-point
+        // graphs).
+        labels = scope.persisted(sym
+          .join(small(labels.select(col("id").as("s"), col("lab").as("nl"))),
+            "s")
+          .groupBy(col("d").as("id"))
+          .agg(expr("mode(nl, true)").as("lab")))
+      }
+      val isolated = universe.join(small(touched), Seq("id"), "left_anti")
+        .withColumn("lab", col("id"))
+      val all = labels.unionByName(isolated)
+      val sizes = all.groupBy(col("lab").as("community"))
+        .agg(count(lit(1)).as("community_size"))
+      all.select(col("id").as(idCol), col("lab").as("community"))
+        .join(sizes, "community")
+        .select(col(idCol), col("community"), col("community_size"))
     }
-    val isolated = universe.join(small(touched), Seq("id"), "left_anti")
-      .withColumn("lab", col("id"))
-    val all = labels.unionByName(isolated)
-    val sizes = all.groupBy(col("lab").as("community"))
-      .agg(count(lit(1)).as("community_size"))
-    val out = all.select(col("id").as(idCol), col("lab").as("community"))
-      .join(sizes, "community")
-      .select(col(idCol), col("community"), col("community_size"))
-    if (materialize) {
-      val m = out.persist(StorageLevel.MEMORY_AND_DISK)
-      m.count()
-      cached.foreach(_.unpersist(false))
-      graft.core.Lineage.release(e0)
-      m
-    } else out
   }
 
   /** Communities of the MinHash near-duplicate graph: LSH candidates
@@ -144,10 +128,9 @@ object LabelProp {
   def nearDupCommunities(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, numHashes: Int = 8, bands: Int = 4,
       threshold: Double = 0.8, rounds: Int = 3,
-      maxBucketSize: Int = 0, materialize: Boolean = true): DataFrame = {
+      maxBucketSize: Int = 0): DataFrame = {
     val pairs = graft.dedup.NearDup.minhashNearDuplicates(
       df, idCol, textCol, n, numHashes, bands, threshold, maxBucketSize)
-    propagate(df.select(idCol), idCol, pairs, "id_a", "id_b", rounds,
-      materialize)
+    propagate(df.select(idCol), idCol, pairs, "id_a", "id_b", rounds)
   }
 }

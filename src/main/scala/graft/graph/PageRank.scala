@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.core.Lineage
 
 /** Fixed-iteration PageRank over a DataFrame edge list (beyond-reference
   * op, SURVEY §2.13) — the graph-centrality companion to the connected-
@@ -50,108 +50,81 @@ object PageRank {
     *   graphs with different dangling fractions. Default false: mass
     *   simply leaks (cheaper; ranking ORDER within a graph is identical
     *   when dangling mass is shared uniformly anyway).
-    * @param materialize lifecycle of the three internal caches (edge list,
-    *   node/degree table, degree-annotated edges). True (default, the safe
-    *   choice for a long-lived application): eagerly evaluate the result,
-    *   release the internal caches before returning — repeated library
-    *   calls cannot accumulate graph-sized cached frames. False (a caller
-    *   that manages the session cache itself, e.g. a bench/ETL step that
-    *   evaluates the result exactly once and then clears the cache): return
-    *   the lazy plan still backed by the internal caches, skipping the
-    *   extra materialization job — the caller MUST evaluate the result
-    *   before `spark.catalog.clearCache()` or its own unpersists.
     */
   def ranks(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int, redistributeDangling: Boolean = false,
-      materialize: Boolean = true): DataFrame = {
+      iterations: Int, redistributeDangling: Boolean = false): DataFrame = {
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1, 50]: $iterations")
-    // null endpoints would silently strand rank mass (a null key matches
-    // no join) and register a phantom null node — drop them up front.
-    // The edge list is scanned twice below (the node/degree aggregation
-    // and the degree join) and its lineage is re-analyzed by EVERY
-    // iteration's plan — CUT it (r19; see Lineage.cut), don't just
-    // persist: with a persist alone the q48 plan was 3,070 lines and
-    // driver plan time ~1.1 s of the gate's ~1.7 s. Materialize mode
-    // only: the lazy-lifecycle contract is "internal caches released by
-    // the caller's clearCache", which cannot see checkpoint blocks —
-    // lazy mode keeps the persist (released by clearCache as before).
-    val eraw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-    val e =
-      if (materialize) graft.core.Lineage.cut(eraw)
-      else eraw.persist(StorageLevel.MEMORY_AND_DISK)
-    // ONE exchange computes both the node set and the out-degrees:
-    // explode each edge into (src, 1) and (dst, 0) and sum per node —
-    // replaces the union+distinct node pass plus a separate degree
-    // groupBy+join pass of the naive formulation (2 shuffles + a join
-    // shuffle → 1 shuffle + a broadcastable join).
-    val nodeDeg = e
-      .select(explode(array(
-        struct(col("src").as("node"), lit(1L).as("c")),
-        struct(col("dst").as("node"), lit(0L).as("c")))).as("x"))
-      .select(col("x.node").as("node"), col("x.c").as("c"))
-      .groupBy("node").agg(sum("c").as("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodeDeg.count()
-    require(n > 0, "PageRank needs at least one non-null edge " +
-      "(empty or all-null edge list yields no nodes)")
-    val nodes = nodeDeg.select("node")
-    // degree side has exactly n rows — broadcast it under the same
-    // threshold as the rank side, so annotating the edges is map-side
-    val degSide = nodeDeg.filter(col("outdeg") > 0)
-    val withDeg = e
-      .join(if (n <= MaxBroadcastNodes) broadcast(degSide) else degSide,
-        e("src") === degSide("node"))
-      .select(col("src"), col("dst"), col("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = (15L * (Scale / n)) / 100L
-    // nodes that source at least one edge — dangling = NOT IN this set
-    val srcNodes = degSide.select("node")
-    var ranks = nodes.withColumn("r", lit(Scale / n))
-    (1 to iterations).foreach { _ =>
-      val rankSide = if (n <= MaxBroadcastNodes) broadcast(ranks) else ranks
-      val inflow = withDeg
-        .join(rankSide, withDeg("src") === rankSide("node"))
-        .select(col("dst").as("node"),
-          expr("r div outdeg").as("contrib"))
-        .groupBy("node").agg(sum("contrib").as("inflow"))
-      ranks =
-        if (redistributeDangling) {
-          // total dangling rank as a 1-row broadcast; each node receives
-          // the same integer share (div n — the remainder vanishes
-          // deterministically, like every other fixed-point rounding here)
-          val dangling = ranks.join(srcNodes, Seq("node"), "left_anti")
-            .agg(coalesce(sum("r"), lit(0L)).as("__dang"))
-          nodes
+    Lineage.materialized { scope =>
+      // null endpoints would silently strand rank mass (a null key matches
+      // no join) and register a phantom null node — drop them up front.
+      // The edge list is scanned twice below (the node/degree aggregation
+      // and the degree join) and its lineage is re-analyzed by EVERY
+      // iteration's plan — CUT it (r19; see Lineage), don't just
+      // persist: with a persist alone the q48 plan was 3,070 lines and
+      // driver plan time ~1.1 s of the gate's ~1.7 s.
+      val e = scope.cut(edges
+        .select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull), eager = false)
+      // ONE exchange computes both the node set and the out-degrees:
+      // explode each edge into (src, 1) and (dst, 0) and sum per node —
+      // replaces the union+distinct node pass plus a separate degree
+      // groupBy+join pass of the naive formulation (2 shuffles + a join
+      // shuffle → 1 shuffle + a broadcastable join).
+      val nodeDeg = scope.persisted(e
+        .select(explode(array(
+          struct(col("src").as("node"), lit(1L).as("c")),
+          struct(col("dst").as("node"), lit(0L).as("c")))).as("x"))
+        .select(col("x.node").as("node"), col("x.c").as("c"))
+        .groupBy("node").agg(sum("c").as("outdeg")))
+      val n = nodeDeg.count()
+      require(n > 0, "PageRank needs at least one non-null edge " +
+        "(empty or all-null edge list yields no nodes)")
+      val nodes = nodeDeg.select("node")
+      // degree side has exactly n rows — broadcast it under the same
+      // threshold as the rank side, so annotating the edges is map-side
+      val degSide = nodeDeg.filter(col("outdeg") > 0)
+      val withDeg = scope.persisted(e
+        .join(if (n <= MaxBroadcastNodes) broadcast(degSide) else degSide,
+          e("src") === degSide("node"))
+        .select(col("src"), col("dst"), col("outdeg")))
+      val base = (15L * (Scale / n)) / 100L
+      // nodes that source at least one edge — dangling = NOT IN this set
+      val srcNodes = degSide.select("node")
+      var ranks = nodes.withColumn("r", lit(Scale / n))
+      (1 to iterations).foreach { _ =>
+        val rankSide = if (n <= MaxBroadcastNodes) broadcast(ranks) else ranks
+        val inflow = withDeg
+          .join(rankSide, withDeg("src") === rankSide("node"))
+          .select(col("dst").as("node"),
+            expr("r div outdeg").as("contrib"))
+          .groupBy("node").agg(sum("contrib").as("inflow"))
+        ranks =
+          if (redistributeDangling) {
+            // total dangling rank as a 1-row broadcast; each node receives
+            // the same integer share (div n — the remainder vanishes
+            // deterministically, like every other fixed-point rounding here)
+            val dangling = ranks.join(srcNodes, Seq("node"), "left_anti")
+              .agg(coalesce(sum("r"), lit(0L)).as("__dang"))
+            nodes
+              .join(inflow, Seq("node"), "left")
+              .crossJoin(broadcast(dangling))
+              .select(col("node"),
+                (lit(base) + expr(
+                  s"85 * (coalesce(inflow, 0L) + __dang div $n) div 100"))
+                  .as("r"))
+          } else nodes
             .join(inflow, Seq("node"), "left")
-            .crossJoin(broadcast(dangling))
             .select(col("node"),
-              (lit(base) + expr(
-                s"85 * (coalesce(inflow, 0L) + __dang div $n) div 100"))
-                .as("r"))
-        } else nodes
-          .join(inflow, Seq("node"), "left")
-          .select(col("node"),
-            (lit(base) +
-              expr("85 * coalesce(inflow, 0L) div 100")).as("r"))
+              (lit(base) +
+                expr("85 * coalesce(inflow, 0L) div 100")).as("r"))
+      }
+      // The result is persisted and counted before the intermediates are
+      // released, so repeated library calls accumulate no graph-sized
+      // caches. Persist+count rather than an eager cut: the checkpoint
+      // routes the same evaluation through the non-adaptive toRdd compile,
+      // measured 2.8× slower on the q48 graph.
+      ranks.select(col("node"), col("r").as("rank_micro"))
     }
-    // Materialize the result OFF the cached frames, then release them: a
-    // long-lived application calling the library repeatedly must not
-    // accumulate cached edge lists across calls (sized for the caller's
-    // graph, they can be large). Eager persist+count rather than an
-    // eager localCheckpoint: the checkpoint routes this same evaluation
-    // through the non-adaptive toRdd compile, measured 2.8× slower on
-    // the q48 graph. The small (node, rank) cache that remains follows
-    // the session cache lifecycle.
-    val out = ranks.select(col("node"), col("r").as("rank_micro"))
-    if (materialize) {
-      val m = out.persist(StorageLevel.MEMORY_AND_DISK)
-      m.count()
-      graft.core.Lineage.release(e)
-      nodeDeg.unpersist(false)
-      withDeg.unpersist(false)
-      m
-    } else out
   }
 }

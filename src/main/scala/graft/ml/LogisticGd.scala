@@ -2,7 +2,6 @@ package graft.ml
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Logistic-regression-style linear classifier trained by budgeted
   * integer-quantized gradient descent — the oracle-replayable twin of the
@@ -54,13 +53,12 @@ object LogisticGd {
     // divisor) — drop incomplete rows up front, the Cuped/Trendline rule.
     val nonNull = (col(labelCol) +: featureCols.map(col))
       .map(_.isNotNull).reduce(_ && _)
-    val feat = df.filter(nonNull).select(
-      (col(labelCol).cast("long") * Scale).as("ym") +:
-        featureCols.zipWithIndex.map { case (c, i) =>
-          col(c).cast("long").as(s"x$i")
-        }: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.core.Lineage.scoped { scope =>
+      val feat = scope.persisted(df.filter(nonNull).select(
+        (col(labelCol).cast("long") * Scale).as("ym") +:
+          featureCols.zipWithIndex.map { case (c, i) =>
+            col(c).cast("long").as(s"x$i")
+          }: _*))
       val w = Array.fill(featureCols.size)(0L)
       for (_ <- 1 to rounds) {
         val z = featureCols.indices
@@ -78,7 +76,7 @@ object LogisticGd {
         }
       }
       w
-    } finally { feat.unpersist(false); () }
+    }
   }
 
   /** Score a frame with a trained model: adds `p_micro` — the hard-sigmoid

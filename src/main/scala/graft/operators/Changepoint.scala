@@ -153,55 +153,56 @@ object Changepoint {
       valueCol: String, targetMean: Double, slack: Double = 0.0,
       chunkSize: Int = 65536): DataFrame = {
     require(chunkSize >= 2, s"chunkSize must be at least 2: $chunkSize")
-    import org.apache.spark.storage.StorageLevel
     val tm = math.floor(targetMean * 1000000.0 + 0.5).toLong
     val slackMicro = math.floor(slack * 1000000.0 + 0.5).toLong
     val w = Window.partitionBy("__k").orderBy("__o")
     val vMicro = floor(col(valueCol).cast("double") * lit(1000000.0) +
       lit(0.5)).cast("long")
-    val chunked = df.filter(col(valueCol).isNotNull)
-      .select(col(keyCol).as("__k"), col(ordCol).as("__o"),
-        vMicro.as("__v"))
-      .withColumn("__chunk",
-        ((row_number().over(w) - 1) / chunkSize).cast("int"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.core.Lineage.materialized { scope =>
+      val chunked = scope.persisted(df.filter(col(valueCol).isNotNull)
+        .select(col(keyCol).as("__k"), col(ordCol).as("__o"),
+          vMicro.as("__v"))
+        .withColumn("__chunk",
+          ((row_number().over(w) - 1) / chunkSize).cast("int")))
       val maxChunk = chunked.agg(max("__chunk")).head().get(0)
       if (maxChunk == null)
-        return chunked.select(col("__k").as(keyCol),
+        chunked.select(col("__k").as(keyCol),
           lit(0L).as("n_points"), lit(0.0).as("s_pos_max"),
           lit(null).cast("long").as("pos_at"),
           lit(0.0).as("s_neg_max"),
           lit(null).cast("long").as("neg_at")).limit(0)
-          .localCheckpoint(true)
-      val sorted = array_sort(
-        collect_list(struct(col("__o").as("o"), col("__v").as("v"))))
-      var state: DataFrame = null // (__k, n_points, __r)
-      (0 to maxChunk.asInstanceOf[Int]).foreach { c =>
-        val grouped = chunked.filter(col("__chunk") === c)
-          .groupBy(col("__k")).agg(sorted.as("__s"))
-        val next =
-          if (c == 0)
-            grouped.select(col("__k"),
-              size(col("__s")).cast("long").as("n_points"),
-              aggregate(col("__s"), FixedZero,
-                fixedStep(tm, slackMicro)).as("__r"))
-          else
-            state.join(grouped, Seq("__k"), "left")
-              .select(col("__k"),
-                (col("n_points") +
-                  coalesce(size(col("__s")), lit(0)).cast("long"))
-                  .as("n_points"),
-                when(col("__s").isNull, col("__r"))
-                  .otherwise(aggregate(col("__s"), col("__r"),
-                    fixedStep(tm, slackMicro))).as("__r"))
-        state = next.localCheckpoint(true)
+      else {
+        val sorted = array_sort(
+          collect_list(struct(col("__o").as("o"), col("__v").as("v"))))
+        var state: DataFrame = null // (__k, n_points, __r)
+        (0 to maxChunk.asInstanceOf[Int]).foreach { c =>
+          val grouped = chunked.filter(col("__chunk") === c)
+            .groupBy(col("__k")).agg(sorted.as("__s"))
+          val next =
+            if (c == 0)
+              grouped.select(col("__k"),
+                size(col("__s")).cast("long").as("n_points"),
+                aggregate(col("__s"), FixedZero,
+                  fixedStep(tm, slackMicro)).as("__r"))
+            else
+              state.join(grouped, Seq("__k"), "left")
+                .select(col("__k"),
+                  (col("n_points") +
+                    coalesce(size(col("__s")), lit(0)).cast("long"))
+                    .as("n_points"),
+                  when(col("__s").isNull, col("__r"))
+                    .otherwise(aggregate(col("__s"), col("__r"),
+                      fixedStep(tm, slackMicro))).as("__r"))
+          val prev = state
+          state = scope.cut(next, eager = true)
+          if (prev != null) scope.release(prev)
+        }
+        state.select(col("__k").as(keyCol), col("n_points"),
+          (col("__r.spmax").cast("double") / lit(1.0e6)).as("s_pos_max"),
+          when(col("__r.spmax") > 0L, col("__r.spo")).as("pos_at"),
+          (col("__r.snmax").cast("double") / lit(1.0e6)).as("s_neg_max"),
+          when(col("__r.snmax") > 0L, col("__r.sno")).as("neg_at"))
       }
-      state.select(col("__k").as(keyCol), col("n_points"),
-        (col("__r.spmax").cast("double") / lit(1.0e6)).as("s_pos_max"),
-        when(col("__r.spmax") > 0L, col("__r.spo")).as("pos_at"),
-        (col("__r.snmax").cast("double") / lit(1.0e6)).as("s_neg_max"),
-        when(col("__r.snmax") > 0L, col("__r.sno")).as("neg_at"))
-    } finally chunked.unpersist(false)
+    }
   }
 }

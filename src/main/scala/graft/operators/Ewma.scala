@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Exponentially-weighted moving average per key — the smoothing step
   * after resample+ffill in a feature pipeline. s_i = α·v_i + (1-α)·s_{i-1}
@@ -61,58 +60,59 @@ object Ewma {
     * (groupBy chunk-fold + join carried levels). The rounds are inherent:
     * the recurrence is sequential in its own rounding, so chunks of one
     * key can never fold in parallel without changing the result. The
-    * levels frame (one row per key) is localCheckpoint-truncated per
-    * round, Components-style.
+    * levels frame (one row per key) is cut per round and the previous
+    * round's released (`Lineage`).
     */
   def latestChunked(df: DataFrame, keyCol: String, ordCol: String,
       valueCol: String, alpha: Double, chunkSize: Int = 65536): DataFrame = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
     require(chunkSize >= 2, s"chunkSize must be at least 2: $chunkSize")
     val w = Window.partitionBy("__k").orderBy("__o")
-    val chunked = df.filter(col(valueCol).isNotNull)
-      .select(col(keyCol).as("__k"), col(ordCol).as("__o"),
-        col(valueCol).as("__v"))
-      .withColumn("__chunk",
-        ((row_number().over(w) - 1) / chunkSize).cast("int"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.core.Lineage.materialized { scope =>
+      val chunked = scope.persisted(df.filter(col(valueCol).isNotNull)
+        .select(col(keyCol).as("__k"), col(ordCol).as("__o"),
+          col(valueCol).as("__v"))
+        .withColumn("__chunk",
+          ((row_number().over(w) - 1) / chunkSize).cast("int")))
       val maxChunk = chunked.agg(max("__chunk")).head().get(0)
-      if (maxChunk == null) {
+      if (maxChunk == null)
         // empty input: empty frame with the latest() output schema
-        return chunked.select(col("__k").as(keyCol),
+        chunked.select(col("__k").as(keyCol),
           lit(0L).as("n_points"), lit(0.0).as("ewma")).limit(0)
-          .localCheckpoint(true)
+      else {
+        val sorted = array_sort(
+          collect_list(struct(col("__o").as("o"), col("__v").as("v"))))
+        val step = (acc: org.apache.spark.sql.Column,
+            x: org.apache.spark.sql.Column) =>
+          lit(alpha) * x.getField("v") + lit(1.0 - alpha) * acc
+        var levels: DataFrame = null // (__k, n_points, ewma)
+        (0 to maxChunk.asInstanceOf[Int]).foreach { c =>
+          val grouped = chunked.filter(col("__chunk") === c)
+            .groupBy(col("__k")).agg(sorted.as("__s"))
+          val next =
+            if (c == 0)
+              grouped.select(col("__k"),
+                size(col("__s")).cast("long").as("n_points"),
+                aggregate(
+                  slice(col("__s"), lit(2),
+                    greatest(size(col("__s")) - 1, lit(0))),
+                  element_at(col("__s"), 1).getField("v"), step).as("ewma"))
+            else
+              // keys exhausted before chunk c keep their level (left join)
+              levels.join(grouped, Seq("__k"), "left")
+                .select(col("__k"),
+                  (col("n_points") +
+                    coalesce(size(col("__s")), lit(0)).cast("long"))
+                    .as("n_points"),
+                  when(col("__s").isNull, col("ewma"))
+                    .otherwise(aggregate(col("__s"), col("ewma"), step))
+                    .as("ewma"))
+          val prev = levels
+          levels = scope.cut(next, eager = true)
+          if (prev != null) scope.release(prev)
+        }
+        levels.withColumnRenamed("__k", keyCol)
       }
-      val sorted = array_sort(
-        collect_list(struct(col("__o").as("o"), col("__v").as("v"))))
-      val step = (acc: org.apache.spark.sql.Column,
-          x: org.apache.spark.sql.Column) =>
-        lit(alpha) * x.getField("v") + lit(1.0 - alpha) * acc
-      var levels: DataFrame = null // (__k, n_points, ewma)
-      (0 to maxChunk.asInstanceOf[Int]).foreach { c =>
-        val grouped = chunked.filter(col("__chunk") === c)
-          .groupBy(col("__k")).agg(sorted.as("__s"))
-        val next =
-          if (c == 0)
-            grouped.select(col("__k"),
-              size(col("__s")).cast("long").as("n_points"),
-              aggregate(
-                slice(col("__s"), lit(2),
-                  greatest(size(col("__s")) - 1, lit(0))),
-                element_at(col("__s"), 1).getField("v"), step).as("ewma"))
-          else
-            // keys exhausted before chunk c keep their level (left join)
-            levels.join(grouped, Seq("__k"), "left")
-              .select(col("__k"),
-                (col("n_points") +
-                  coalesce(size(col("__s")), lit(0)).cast("long"))
-                  .as("n_points"),
-                when(col("__s").isNull, col("ewma"))
-                  .otherwise(aggregate(col("__s"), col("ewma"), step))
-                  .as("ewma"))
-        levels = next.localCheckpoint(true)
-      }
-      levels.withColumnRenamed("__k", keyCol)
-    } finally chunked.unpersist(false)
+    }
   }
 }

@@ -708,18 +708,18 @@ object MlQueries {
     // a third exhaustive enumeration against the FINAL vocabulary.
     GateQuery(
       "t60_unigram_encode",
-      (s, dir) => {
+      (s, dir) => graft.core.Lineage.materialized { scope =>
         // persisted: BOTH the training subset (gw) and the serving set
         // derive from this census — unpersisted it would tokenize the
-        // corpus twice; freed by the harness's per-query clearCache
-        val words = graft.text.UnigramTok.wordCensus(
-          t(s, dir, "documents"), "text", maxWordLen = 20).persist()
+        // corpus twice
+        val words = scope.persisted(graft.text.UnigramTok.wordCensus(
+          t(s, dir, "documents"), "text", maxWordLen = 20))
         val gw = words.filter(length(col("word")) <= 10)
           .orderBy(col("wcnt").desc, col("word").asc).limit(100)
-        val trained = graft.text.UnigramTok.emTrainWords(gw,
-          vocabSize = 60, iters = 2, maxPieceLen = 5, multiPieces = 150)
+        val trained = scope.persisted(graft.text.UnigramTok.emTrainWords(gw,
+          vocabSize = 60, iters = 2, maxPieceLen = 5, multiPieces = 150))
         val vocab = graft.text.UnigramTok.vocabOf(trained)
-        trained.unpersist() // vocabOf collected it; the cache is dead
+        scope.release(trained) // vocabOf collected it; the cache is dead
         val serveWords = words.filter(length(col("word")) <= 12)
           .orderBy(col("wcnt").desc, col("word").asc).limit(150)
         graft.text.UnigramTok.estepCounts(serveWords, vocab)

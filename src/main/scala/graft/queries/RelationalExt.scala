@@ -707,9 +707,6 @@ object RelationalExt {
     // ids (cust→2k, supp→2k+1): ranks depend only on structure, so the
     // "c…"/"s…" labels the oracle compares against attach at output —
     // string-keyed joins/distincts measured ~2× slower end-to-end.
-    // `pairs` is persisted so the symmetric union's two branches don't
-    // each recompute the orders⋈lineitem join (ranks() is eager, so the
-    // cache is consumed before the unpersist).
     GateQuery(
       "q48_pagerank",
       (s, dir) => {
@@ -719,18 +716,10 @@ object RelationalExt {
           .select((col("o_custkey").cast("long") * 2).as("src"),
             (col("l_suppkey").cast("long") * 2 + 1).as("dst"))
           .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val edges = pairs
           .union(pairs.select(col("dst").as("src"), col("src").as("dst")))
-        // materialize=false: the gate evaluates the result exactly once and
-        // both harnesses (Bench.timedRun, Verify) clearCache() right after —
-        // the eager persist+count lifecycle would pay one extra
-        // materialization job per invocation for caches cleared anyway
-        // (the r8 bench's only regression, q48 2.06→3.50 s).
-        val r = graft.graph.PageRank.ranks(edges, "src", "dst", 3,
-          materialize = false)
-        pairs.unpersist(false)
-        r.select(
+        graft.graph.PageRank.ranks(edges, "src", "dst", 3)
+          .select(
             when(col("node") % 2 === 0,
               concat(lit("c"), expr("node div 2").cast("string")))
               .otherwise(

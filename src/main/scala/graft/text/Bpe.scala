@@ -73,16 +73,11 @@ object Bpe {
     * left-to-right non-overlapping pass because a freshly merged symbol
     * a||b can never equal a again; the boundary check is exact (either
     * the accumulator IS a, or it ends with ' '||a — symbols cannot
-    * contain the space). Round state is persisted and rolled forward
-    * with the PageRank cache lifecycle.
+    * contain the space). Round state is cut and rolled forward within
+    * one `Lineage` scope.
     */
-  def mergeLoop(df: DataFrame, textCol: String, merges: Int): DataFrame = {
-    val spark = df.sparkSession
-    val (results, live) = runMerges(df, textCol, merges, CharAtoms)
-    live.foreach(graft.core.Lineage.release)
-    import spark.implicits._
-    results.toDF("round", "sym_a", "sym_b", "cnt").orderBy("round")
-  }
+  def mergeLoop(df: DataFrame, textCol: String, merges: Int): DataFrame =
+    mergeTable(df, textCol, merges, CharAtoms)
 
   /** BYTE-level merge loop — the production tokenizer-trainer form
     * (GPT-2 lineage: Radford et al. 2019 train BPE over raw bytes so any
@@ -103,10 +98,14 @@ object Bpe {
     * codepoint-safe when no UTF-8 sequence straddles a symbol boundary).
     */
   def byteMergeLoop(df: DataFrame, textCol: String, merges: Int)
-      : DataFrame = {
+      : DataFrame =
+    mergeTable(df, textCol, merges, ByteAtoms)
+
+  private def mergeTable(df: DataFrame, textCol: String, merges: Int,
+      atoms: Atomizer): DataFrame = {
     val spark = df.sparkSession
-    val (results, live) = runMerges(df, textCol, merges, ByteAtoms)
-    live.foreach(graft.core.Lineage.release)
+    val results = graft.core.Lineage.scoped(
+      runMerges(_, df, textCol, merges, atoms)._1)
     import spark.implicits._
     results.toDF("round", "sym_a", "sym_b", "cnt").orderBy("round")
   }
@@ -138,21 +137,20 @@ object Bpe {
     // never silently become a corpus-sized driver materialization
     require(k >= 1 && k <= 65536, s"k must be in [1, 65536], got $k")
     val spark = df.sparkSession
-    val (_, live) = runMerges(df, textCol, merges, atoms)
-    val vocab = live.last // (sym, wcnt) weighted vocabulary
     // The census is ≤ k rows (model-bounded) — collect it and hand back a
     // local frame, so every cluster-side cache is released HERE and the
-    // caller owns nothing (a returned persisted frame would leak outside
-    // the bench/verify clearCache harnesses).
-    val rows = vocab
-      .select(explode(split(col("sym"), " ")).as("token"), col("wcnt"))
-      .groupBy("token").agg(sum("wcnt").as("cnt"))
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("cnt").desc, col("token").asc)).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("rank"), col("token"), col("cnt"))
-      .collect()
-    live.foreach(graft.core.Lineage.release)
+    // caller owns nothing.
+    val rows = graft.core.Lineage.scoped { scope =>
+      val (_, vocab) = runMerges(scope, df, textCol, merges, atoms)
+      vocab // (sym, wcnt) weighted vocabulary
+        .select(explode(split(col("sym"), " ")).as("token"), col("wcnt"))
+        .groupBy("token").agg(sum("wcnt").as("cnt"))
+        .withColumn("rank", row_number().over(
+          Window.orderBy(col("cnt").desc, col("token").asc)).cast("long"))
+        .filter(col("rank") <= k)
+        .select(col("rank"), col("token"), col("cnt"))
+        .collect()
+    }
     import spark.implicits._
     rows.map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
       .toSeq.toDF("rank", "token", "cnt")
@@ -277,32 +275,30 @@ object Bpe {
     * at vocabulary size, orders of magnitude below corpus size. Counts
     * are identical to occurrence-level counting by construction.
     *
-    * Returns the merge table rows and the still-cached frames (last = the
-    * final (sym, wcnt) vocabulary, lazy past the last winner collect).
-    * Callers release the caches.
+    * Returns the merge table rows and the final (sym, wcnt) vocabulary
+    * (lazy past the last winner collect), a cut recorded in `scope`.
     */
-  private def runMerges(df: DataFrame, textCol: String, merges: Int,
-      atoms: Atomizer = CharAtoms)
-      : (Seq[(Long, String, String, Long)], Seq[DataFrame]) = {
+  private def runMerges(scope: graft.core.Lineage.Scope, df: DataFrame,
+      textCol: String, merges: Int, atoms: Atomizer)
+      : (Seq[(Long, String, String, Long)], DataFrame) = {
     require(merges >= 1, s"merges must be >= 1, got $merges")
     val results =
       scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     val text =
       if (atoms.lowercase) lower(col(textCol)) else col(textCol)
-    // Round state is lineage-CUT, not just persisted (r19, Lineage.cut):
+    // Round state is lineage-CUT, not just persisted (r19, Lineage):
     // each round's mergeFold is a large expression tree, so with persists
     // alone round r's plan nested r folds plus the corpus tokenize —
     // analysis + codegen per round grew with r (GateProfile r19: 1.6 s of
     // the t52 gate's wall was driver/plan gaps). With the cut every
-    // round plans one fold over a vocabulary-sized leaf. Checkpoint
-    // blocks live outside the CacheManager, so lifecycle release is
-    // Lineage.release (rounds release `prev` after the winner collect
-    // materializes `cur`; callers release the returned frames).
-    var cur = graft.core.Lineage.cut(df
+    // round plans one fold over a vocabulary-sized leaf. Rounds release
+    // `prev` after the winner collect materializes `cur`; the scope
+    // releases the rest.
+    var cur = scope.cut(df
       .select(explode(tokens(text)).as("tok"))
       .filter(length(col("tok")) >= atoms.minTokLen)
       .groupBy(atoms.sym(col("tok")).as("sym"))
-      .agg(count(lit(1)).as("wcnt")))
+      .agg(count(lit(1)).as("wcnt")), eager = false)
     // The winner collect consumes ALL of `cur`, so it doubles as the
     // round's materialization point — no extra eager count pass per round;
     // the previous round's cache is released only after the collect has
@@ -322,7 +318,7 @@ object Bpe {
         .orderBy(col("cnt").desc,
           concat_ws(" ", col("sa"), col("sb")).asc)
         .limit(1).collect()
-      prev.foreach(graft.core.Lineage.release)
+      prev.foreach(scope.release)
       prev = None
       if (top.isEmpty) done = true
       else {
@@ -331,13 +327,13 @@ object Bpe {
         results += ((r.toLong, a, b, cnt))
         // two distinct pre-merge words can rewrite to the same symbol
         // string; re-aggregating keeps the vocabulary canonical
-        val next = graft.core.Lineage.cut(cur
+        val next = scope.cut(cur
           .groupBy(mergeFold(col("sym"), a, b).as("sym"))
-          .agg(sum("wcnt").as("wcnt")))
+          .agg(sum("wcnt").as("wcnt")), eager = false)
         prev = Some(cur)
         cur = next
       }
     }
-    (results.toSeq, prev.toSeq :+ cur)
+    (results.toSeq, cur)
   }
 }

@@ -164,14 +164,14 @@ object UnigramTok {
       iters: Int = 2, maxPieceLen: Int = 6, multiPieces: Int = 400)
       : DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
-    words.persist()
-    var vocabDf = seedVocab(words, maxPieceLen, multiPieces)
-    var i = 0
-    while (i < iters) {
-      vocabDf = emTrainStep(words, estepCounts(words, vocabOf(vocabDf)))
-      i += 1
-    }
-    val pruned = {
+    graft.core.Lineage.materialized { scope =>
+      scope.persisted(words)
+      var vocabDf = seedVocab(words, maxPieceLen, multiPieces)
+      var i = 0
+      while (i < iters) {
+        vocabDf = emTrainStep(words, estepCounts(words, vocabOf(vocabDf)))
+        i += 1
+      }
       val chars = vocabDf.filter(length(col("piece")) === 1)
       val multi = vocabDf.filter(length(col("piece")) >= 2)
         .withColumn("rnk", row_number().over(
@@ -179,11 +179,8 @@ object UnigramTok {
         .filter(col("rnk") <= vocabSize)
         .drop("rnk")
       withCosts(chars.unionByName(multi).select("piece", "cnt"))
+        .select("piece", "cnt", "cost")
     }
-    val out = pruned.select("piece", "cnt", "cost")
-    out.persist().count()
-    words.unpersist()
-    out
   }
 
   /** Total corpus cost (micro-nats) of segmenting the census under a

@@ -29,6 +29,23 @@ abstract class SparkSpec extends AnyFlatSpec with Matchers {
       spark.sparkContext.parallelize(rows, numSlices = 1), schema)
   }
 
+  /** Ids of the RDDs persisted right now (checkpoint blocks included). */
+  def persistedIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Runs `op`, reads its result, unpersists it, and returns the ids of
+    * the persisted RDDs that appeared during the call and are still there
+    * — empty when the result was all the call left behind. Compared by id,
+    * not by count: driver GC may unpersist an older RDD meanwhile.
+    */
+  def residueOf(op: => DataFrame): Set[Int] = {
+    val before = persistedIds
+    val out = op
+    out.collect()
+    out.unpersist(true)
+    persistedIds -- before
+  }
+
   /** Unordered DataFrame comparison on selected columns. */
   def rowsOf(df: DataFrame, cols: String*): Set[Seq[Any]] =
     df.select(cols.head, cols.tail: _*).collect()

@@ -77,9 +77,11 @@ class KCoreSpec extends SparkSpec {
   }
 
   it should "release every intermediate cache when materialized" in {
-    val before = spark.sparkContext.getPersistentRDDs.size
-    run(Seq(1L, 2L, 3L), Seq((1L, 2L), (2L, 3L), (1L, 3L)), 2, 2)
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("s", "d")
     // only the returned (still-persisted) frame may remain
-    spark.sparkContext.getPersistentRDDs.size should be <= (before + 1)
+    residueOf(KCore.peel(Seq(1L, 2L, 3L).toDF("id"), "id", edges, "s", "d",
+      k = 2, rounds = 2)) shouldBe empty
+    residueOf(KCore.peelEdges(edges, "s", "d", k = 2, rounds = 2)) shouldBe
+      empty
   }
 }

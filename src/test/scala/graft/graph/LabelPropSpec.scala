@@ -69,21 +69,14 @@ class LabelPropSpec extends SparkSpec {
     m(4L) shouldBe 4L
   }
 
-  it should "agree between the materialized and lazy lifecycles" in {
+  it should "release its intermediates" in {
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog today"),
       (2L, "the quick brown fox jumps over the lazy dog today"),
       (3L, "something else entirely about window functions")
     ).toDF("doc_id", "text")
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val eager = LabelProp.nearDupCommunities(docs, "doc_id", "text",
-      threshold = 0.5, rounds = 2).collect().map(_.toSeq).sortBy(_.toString)
-    // the default lifecycle releases every intermediate it cached; only
-    // the materialized result itself remains
-    spark.sparkContext.getPersistentRDDs.size should be <= before + 1
-    val lazyR = LabelProp.nearDupCommunities(docs, "doc_id", "text",
-      threshold = 0.5, rounds = 2, materialize = false)
-      .collect().map(_.toSeq).sortBy(_.toString)
-    lazyR shouldBe eager
+    // only the materialized result itself remains, until unpersisted
+    residueOf(LabelProp.nearDupCommunities(docs, "doc_id", "text",
+      threshold = 0.5, rounds = 2)) shouldBe empty
   }
 }

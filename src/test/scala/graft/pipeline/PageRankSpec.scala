@@ -80,24 +80,15 @@ class PageRankSpec extends SparkSpec {
     on shouldBe off
   }
 
-  it should "honor the materialize lifecycle flag" in {
+  it should "release its intermediates" in {
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "a")).toDF("src", "dst")
-    spark.catalog.clearCache()
-    val n0 = spark.sparkContext.getPersistentRDDs.size
-    // default lifecycle: internal caches (edge list, node/degree,
-    // degree-annotated edges) are released before return — only the
-    // materialized result cache remains
-    val eagerDf = PageRank.ranks(edges, "src", "dst", 2)
-    val eager = eagerDf.orderBy("node").as[(String, Long)].collect().toSeq
-    spark.sparkContext.getPersistentRDDs.size shouldBe (n0 + 1)
-    eagerDf.unpersist(true)
-    // materialize=false: identical values; the internal caches are still
-    // live at return (caller-managed lifecycle), released by clearCache
-    val lazyDf = PageRank.ranks(edges, "src", "dst", 2, materialize = false)
-    spark.sparkContext.getPersistentRDDs.size should be > n0
-    lazyDf.orderBy("node").as[(String, Long)].collect().toSeq shouldBe eager
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.size shouldBe n0
+    // internal caches (edge cut, node/degree, degree-annotated edges) are
+    // released before return — only the materialized result cache remains
+    val before = persistedIds
+    val ranks = PageRank.ranks(edges, "src", "dst", 2)
+    (persistedIds -- before).size shouldBe 1
+    ranks.unpersist(true)
+    (persistedIds -- before) shouldBe empty
   }
 
   it should "be invariant under physical layout" in {
