@@ -175,17 +175,21 @@ object Changepoint {
         val sorted = array_sort(
           collect_list(struct(col("__o").as("o"), col("__v").as("v"))))
         var state: DataFrame = null // (__k, n_points, __r)
+        var carried: DataFrame = null // the cut state this round reads
         (0 to maxChunk.asInstanceOf[Int]).foreach { c =>
           val grouped = chunked.filter(col("__chunk") === c)
             .groupBy(col("__k")).agg(sorted.as("__s"))
-          val next =
+          state =
             if (c == 0)
               grouped.select(col("__k"),
                 size(col("__s")).cast("long").as("n_points"),
                 aggregate(col("__s"), FixedZero,
                   fixedStep(tm, slackMicro)).as("__r"))
-            else
-              state.join(grouped, Seq("__k"), "left")
+            else {
+              val prev = carried
+              carried = scope.cut(state, eager = true)
+              if (prev != null) scope.release(prev)
+              carried.join(grouped, Seq("__k"), "left")
                 .select(col("__k"),
                   (col("n_points") +
                     coalesce(size(col("__s")), lit(0)).cast("long"))
@@ -193,10 +197,9 @@ object Changepoint {
                   when(col("__s").isNull, col("__r"))
                     .otherwise(aggregate(col("__s"), col("__r"),
                       fixedStep(tm, slackMicro))).as("__r"))
-          val prev = state
-          state = scope.cut(next, eager = true)
-          if (prev != null) scope.release(prev)
+            }
         }
+        // the last round is not cut: `materialized` computes it once
         state.select(col("__k").as(keyCol), col("n_points"),
           (col("__r.spmax").cast("double") / lit(1.0e6)).as("s_pos_max"),
           when(col("__r.spmax") > 0L, col("__r.spo")).as("pos_at"),

@@ -86,10 +86,11 @@ object Ewma {
             x: org.apache.spark.sql.Column) =>
           lit(alpha) * x.getField("v") + lit(1.0 - alpha) * acc
         var levels: DataFrame = null // (__k, n_points, ewma)
+        var carried: DataFrame = null // the cut levels this round reads
         (0 to maxChunk.asInstanceOf[Int]).foreach { c =>
           val grouped = chunked.filter(col("__chunk") === c)
             .groupBy(col("__k")).agg(sorted.as("__s"))
-          val next =
+          levels =
             if (c == 0)
               grouped.select(col("__k"),
                 size(col("__s")).cast("long").as("n_points"),
@@ -97,9 +98,12 @@ object Ewma {
                   slice(col("__s"), lit(2),
                     greatest(size(col("__s")) - 1, lit(0))),
                   element_at(col("__s"), 1).getField("v"), step).as("ewma"))
-            else
+            else {
+              val prev = carried
+              carried = scope.cut(levels, eager = true)
+              if (prev != null) scope.release(prev)
               // keys exhausted before chunk c keep their level (left join)
-              levels.join(grouped, Seq("__k"), "left")
+              carried.join(grouped, Seq("__k"), "left")
                 .select(col("__k"),
                   (col("n_points") +
                     coalesce(size(col("__s")), lit(0)).cast("long"))
@@ -107,10 +111,9 @@ object Ewma {
                   when(col("__s").isNull, col("ewma"))
                     .otherwise(aggregate(col("__s"), col("ewma"), step))
                     .as("ewma"))
-          val prev = levels
-          levels = scope.cut(next, eager = true)
-          if (prev != null) scope.release(prev)
+            }
         }
+        // the last round is not cut: `materialized` computes it once
         levels.withColumnRenamed("__k", keyCol)
       }
     }

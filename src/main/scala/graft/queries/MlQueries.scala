@@ -728,8 +728,7 @@ object MlQueries {
               .orderBy(col("cnt").desc, col("piece").asc)).cast("long"))
           .filter(col("rank") <= 40)
           .select(col("rank"), col("piece"), col("cnt"))
-          .orderBy("rank")
-      },
+      }.orderBy("rank"), // outside: the cached result needs no sort
       Some(s"""
         WITH RECURSIVE $unigramGwSeedCtes,
         ${emRound(1)},
